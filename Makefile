@@ -11,10 +11,13 @@ lint:
 	python tools/lint.py
 
 # default tier (r14 verdict #8): everything except the `slow` marker —
-# multi-JVM cluster suites, SIGKILL/injected-failure recovery, barrier-fit
-# system tests (membership: tests/conftest.py SLOW_MODULES). Measured r15:
-# default 276 tests / ~21 min of wall in a 25%-inflated window (~17 min
-# clean), slow tier 34 tests / ~25 min — full pass 307 green in 45:54.
+# multi-JVM cluster suites and SIGKILL/injected-failure recovery
+# (membership: tests/conftest.py SLOW_MODULES). The histgbm differential
+# and system tests joined the default tier once histgbm merged over its
+# own socket ring instead of one ~1 s barrier allGather per tree level.
+# Measured r15 (before that move): default 276 tests / ~21 min of wall in
+# a 25%-inflated window (~17 min clean), slow tier 34 tests / ~25 min —
+# full pass 307 green in 45:54.
 test:
 	python -m pytest tests/ -x -q -m "not slow"
 

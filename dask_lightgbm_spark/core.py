@@ -29,6 +29,7 @@ estimator surface with zero native deps.
 from __future__ import annotations
 
 import pickle
+import socket
 
 import numpy as np
 import pandas as pd
@@ -416,6 +417,12 @@ def train_lightgbm_barrier(
     reference where only workers that own parts participate
     (``worker_map``, core.py:113-117). Real LightGBM rejects 0-sample fit,
     so an empty task joining the ring would deadlock the rendezvous.
+    Collective models (``histgbm``) bind their ring listener on an
+    ephemeral port before that ``allGather`` and publish ``host:port`` in
+    the same payload, so the whole fit pays exactly one Spark collective;
+    every per-level reduction then runs over the ring
+    (:class:`histgbm.RingComm`), with ``time_out`` (minutes, LightGBM's
+    unit) bounding each socket wait.
 
     ``max_retries`` re-runs the whole (side-effect-free) training job when
     Spark aborts the barrier stage — barrier ResultStages are never
@@ -424,10 +431,11 @@ def train_lightgbm_barrier(
     both the abort at ``max_retries=0`` and the recovery at the default).
     """
     # collective models (the factory class itself exposes set_barrier_comm,
-    # e.g. histgbm.HistGBMRegressor) reduce over BarrierTaskContext
-    # .allGather and never touch the lightgbm native library — they run
-    # wheel-free through the same barrier stage
-    if not _HAVE_LGBM and not hasattr(model_factory, "set_barrier_comm"):
+    # e.g. histgbm.HistGBMRegressor) reduce over their own socket ring and
+    # never touch the lightgbm native library — they run wheel-free
+    # through the same barrier stage
+    collective = hasattr(model_factory, "set_barrier_comm")
+    if not _HAVE_LGBM and not collective:
         raise RuntimeError(
             "lightgbm is not importable on the executors; use backend='mllib'"
         )
@@ -537,96 +545,108 @@ def train_lightgbm_barrier(
                     w_parts.append(b[wcol].to_numpy())
         n_rows = sum(len(y) for y in y_parts)
 
-        # allGather doubles as the rendezvous (all peers reach this point
-        # before anyone opens a socket) and tells every task which
-        # partitions actually hold data
-        counts = [int(c) for c in ctx.allGather(str(n_rows))]
-        active = [i for i, c in enumerate(counts) if c > 0]
-        if not active:
-            if idx == 0:
-                raise ValueError("cannot train: all partitions are empty")
-            return
-        if n_rows == 0:
-            return  # no data → stay out of the LightGBM ring (see docstring)
+        # a collective model's ring listener is bound BEFORE the rendezvous
+        # so every peer's connect lands in a backlog; the ring closes it
+        listener = None
+        payload = str(n_rows)
+        if collective:
+            listener = socket.create_server(("", 0))
+            payload += f" {all_hosts[idx]}:{listener.getsockname()[1]}"
+        try:
+            # allGather doubles as the rendezvous (all peers reach this point
+            # before anyone opens a socket), tells every task which partitions
+            # actually hold data, and carries the collective ring's listeners
+            gathered = [m.split() for m in ctx.allGather(payload)]
+            counts = [int(m[0]) for m in gathered]
+            active = [i for i, c in enumerate(counts) if c > 0]
+            if not active:
+                if idx == 0:
+                    raise ValueError("cannot train: all partitions are empty")
+                return
+            if n_rows == 0:
+                return  # no data → stay out of the LightGBM ring (see docstring)
 
-        rank = active.index(idx)
-        hosts = [all_hosts[i] for i in active]
-        ports = [local_listen_port + r for r in range(len(hosts))]
-        net = {
-            "machines": ",".join(f"{h}:{p}" for h, p in zip(hosts, ports)),
-            "local_listen_port": ports[rank],
-            "num_machines": len(hosts),
-            "time_out": time_out,
-        }
+            rank = active.index(idx)
+            hosts = [all_hosts[i] for i in active]
+            ports = [local_listen_port + r for r in range(len(hosts))]
+            net = {
+                "machines": ",".join(f"{h}:{p}" for h, p in zip(hosts, ports)),
+                "local_listen_port": ports[rank],
+                "num_machines": len(hosts),
+                "time_out": time_out,
+            }
 
-        label = np.concatenate(y_parts)
-        weight = np.concatenate(w_parts) if w_parts else None
+            label = np.concatenate(y_parts)
+            weight = np.concatenate(w_parts) if w_parts else None
 
-        if booster_params_net is not None:
-            from lightgbm.basic import _LIB, _safe_call
-            # STREAMING ingest: the accumulated float64 blocks are the
-            # training data — lightgbm.Dataset pulls batch_size-row slices
-            # through the Sequence protocol and bins them into its own
-            # compact representation. Peak ingest RAM ≈ 1.0× (the resident
-            # blocks) instead of the matrix path's ≈1.5× (blocks + the
-            # preallocated copy, transiently). SURVEY §7 / r2 judge ask #4;
-            # reference concat (core.py:72-75) was the 2× worst case.
-            import lightgbm as lgb
+            if booster_params_net is not None:
+                from lightgbm.basic import _LIB, _safe_call
+                # STREAMING ingest: the accumulated float64 blocks are the
+                # training data — lightgbm.Dataset pulls batch_size-row slices
+                # through the Sequence protocol and bins them into its own
+                # compact representation. Peak ingest RAM ≈ 1.0× (the resident
+                # blocks) instead of the matrix path's ≈1.5× (blocks + the
+                # preallocated copy, transiently). SURVEY §7 / r2 judge ask #4;
+                # reference concat (core.py:72-75) was the 2× worst case.
+                import lightgbm as lgb
 
-            seqs = seq_factory(lgb.Sequence, X_parts, seq_rows)
-            ds = lgb.Dataset(seqs, label=label, weight=weight)
-            try:
-                booster = lgb.train(
-                    {**booster_params_net, **net}, ds, num_boost_round=n_rounds
-                )
-            finally:
-                _safe_call(_LIB.LGBM_NetworkFree())  # reference core.py:81
-            if rank == 0:
-                yield pd.DataFrame({"model": [pickle.dumps(booster)]})
-            return
+                seqs = seq_factory(lgb.Sequence, X_parts, seq_rows)
+                ds = lgb.Dataset(seqs, label=label, weight=weight)
+                try:
+                    booster = lgb.train(
+                        {**booster_params_net, **net}, ds, num_boost_round=n_rounds
+                    )
+                finally:
+                    _safe_call(_LIB.LGBM_NetworkFree())  # reference core.py:81
+                if rank == 0:
+                    yield pd.DataFrame({"model": [pickle.dumps(booster)]})
+                return
 
-        if sparse_mode:
-            data = csr_builder(fv_rows, n_feat)
-        else:
-            # copy batches into a preallocated matrix, releasing each as it
-            # lands: peak RAM ≈ 1.5× the matrix instead of the 2× a vstack
-            # of retained batches costs (reference concat, core.py:72-75,
-            # was 2×; SURVEY §7 names this the training-ingest risk). The
-            # ingest='sequence' flag above removes the copy entirely.
-            data = np.empty((n_rows, n_feat), dtype=np.float64)
-            off = 0
-            while X_parts:
-                p = X_parts.pop(0)
-                data[off : off + len(p)] = p
-                off += len(p)
+            if sparse_mode:
+                data = csr_builder(fv_rows, n_feat)
+            else:
+                # copy batches into a preallocated matrix, releasing each as it
+                # lands: peak RAM ≈ 1.5× the matrix instead of the 2× a vstack
+                # of retained batches costs (reference concat, core.py:72-75,
+                # was 2×; SURVEY §7 names this the training-ingest risk). The
+                # ingest='sequence' flag above removes the copy entirely.
+                data = np.empty((n_rows, n_feat), dtype=np.float64)
+                off = 0
+                while X_parts:
+                    p = X_parts.pop(0)
+                    data[off : off + len(p)] = p
+                    off += len(p)
 
-        local_params = {**params, **net}
-        model = model_factory(**local_params)
-        if hasattr(model, "set_barrier_comm"):
-            # COLLECTIVE model (e.g. histgbm.HistGBMRegressor): its fit
-            # reduces over BarrierTaskContext.allGather instead of the
-            # LightGBM socket ring — no lightgbm import, no NetworkFree.
-            # allGather blocks until EVERY task in the stage calls it, so
-            # a task that exited early (empty partition) would deadlock
-            # the collective: refuse up front with an actionable error.
-            if len(active) != len(counts):
-                empty = sorted(set(range(len(counts))) - set(active))
-                raise ValueError(
-                    "collective (allGather-based) models require every "
-                    f"partition to hold rows; partitions {empty} are "
-                    "empty — lower num_workers or repartition upstream"
-                )
-            model.set_barrier_comm(ctx)
-            model.fit(data, label, sample_weight=weight, **fit_kwargs)
-        else:
-            from lightgbm.basic import _LIB, _safe_call
-
-            try:
+            local_params = {**params, **net}
+            model = model_factory(**local_params)
+            if collective:
+                # COLLECTIVE model (e.g. histgbm.HistGBMRegressor): its fit
+                # reduces over its own ring of every barrier task — no
+                # lightgbm import, no NetworkFree. A task that exited early
+                # (empty partition) would leave a hole in that ring: refuse
+                # up front with an actionable error.
+                if len(active) != len(counts):
+                    empty = sorted(set(range(len(counts))) - set(active))
+                    raise ValueError(
+                        "collective (ring-based) models require every "
+                        f"partition to hold rows; partitions {empty} are "
+                        "empty — lower num_workers or repartition upstream"
+                    )
+                peers = [m[1] for m in gathered]
+                model.set_barrier_comm(listener, peers, idx, 60.0 * time_out)
                 model.fit(data, label, sample_weight=weight, **fit_kwargs)
-            finally:
-                _safe_call(_LIB.LGBM_NetworkFree())  # reference core.py:81
-        if rank == 0:  # first data-holding task returns the model (core.py:77-80)
-            yield pd.DataFrame({"model": [pickle.dumps(model)]})
+            else:
+                from lightgbm.basic import _LIB, _safe_call
+
+                try:
+                    model.fit(data, label, sample_weight=weight, **fit_kwargs)
+                finally:
+                    _safe_call(_LIB.LGBM_NetworkFree())  # reference core.py:81
+            if rank == 0:  # first data-holding task returns the model (core.py:77-80)
+                yield pd.DataFrame({"model": [pickle.dumps(model)]})
+        finally:
+            if listener is not None:
+                listener.close()  # early exits; the ring closes its own
 
     # Barrier ResultStage failures are NOT stage-retried by Spark: the
     # scheduler aborts the job on the first failed barrier task ("Could not

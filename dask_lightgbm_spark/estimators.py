@@ -167,8 +167,8 @@ class _SparkLGBMBase:
                 )
             if backend == "histgbm":
                 # the wheel-free collective GBDT (histgbm module): same
-                # barrier stage, allGather collective instead of the
-                # LightGBM socket ring — squared-loss + pinball-quantile
+                # barrier stage, its own numpy socket ring instead of
+                # LightGBM's native one — squared-loss + pinball-quantile
                 # regression, binary logistic, and softmax multiclass
                 # (num_classes > 2; the
                 # class count must be declared up front, like the

@@ -10,9 +10,11 @@ accuracy thresholds) — had no executable counterpart. This module makes
 it BIT-EXACTLY testable: a deterministic exact-histogram GBDT (squared
 loss, level-wise trees — LightGBM's data-parallel algorithm in
 miniature) whose distributed fit runs through
-:func:`core.train_lightgbm_barrier`'s barrier stage with
-``BarrierTaskContext.allGather`` as the collective, in place of
-LightGBM's socket ring.
+:func:`core.train_lightgbm_barrier`'s barrier stage, with a TCP ring
+between the barrier tasks (:class:`RingComm`) as the collective, as
+LightGBM's own ``machines`` ring is. The barrier stage's one
+``allGather`` is the rendezvous that publishes each task's listener;
+no Spark collective runs per tree level.
 
 Bit-equality under ANY partitioning is by construction, not hope:
 
@@ -30,9 +32,9 @@ Therefore ``HistGBMRegressor().fit(X, y)`` on the driver and the same
 fit sharded over N barrier tasks produce identical trees and
 bit-identical predictions — which is the differential test
 (tests/test_histgbm_differential.py) the real LightGBM path cannot have
-here. The per-level allGather of (count, grad) histograms is exactly the
-merge LightGBM's ``tree_learner=data`` performs over its ring
-(Reduce-Scatter in the paper; allGather here since payloads are tiny).
+here. The per-level ring allreduce (reduce-scatter, then allgather) of
+the (count, grad, hess) histograms is exactly the merge LightGBM's
+``tree_learner=data`` performs over its ring.
 
 Two contract boundaries, by design:
 
@@ -53,7 +55,8 @@ Two contract boundaries, by design:
 
 from __future__ import annotations
 
-import base64
+import select
+import socket
 
 import numpy as np
 
@@ -86,42 +89,130 @@ class LocalComm:
         return mn.copy(), mx.copy()
 
 
-class BarrierComm:
-    """Collectives over ``BarrierTaskContext.allGather`` (rank-ordered,
-    base64-framed — allGather speaks strings). Every participant gets
-    every payload; reductions are int64 sums / float min-max, so the
-    combine order cannot matter."""
+class RingComm:
+    """Collectives over a TCP ring between the barrier tasks: each rank
+    connects to its right neighbour and accepts its left one, and every
+    reduction is a ring reduce-scatter followed by a ring allgather
+    (``2 * (size - 1)`` neighbour exchanges, each moving ``1/size`` of the
+    array) — the executor-side AllReduce LightGBM's ``tree_learner=data``
+    runs over its ``machines`` ring. The combine is elementwise int64 add
+    or float min, both exact and order-free, so the result is identical on
+    every rank and equal to a single-process reduction bit for bit.
 
-    def __init__(self, ctx):
-        self._ctx = ctx
-        infos = ctx.getTaskInfos()
-        self.size = len(infos)
-        self.rank = ctx.partitionId()
+    ``listener`` is this rank's bound, listening socket (the trainer binds
+    it before the rendezvous that publishes ``peers``, so every connect
+    lands in a backlog); it is closed once the left neighbour is in.
+    ``timeout`` (seconds) bounds every connect, accept and wait for a
+    neighbour. A failed exchange closes both sockets before it raises, so
+    a dead peer's neighbours fail in turn instead of waiting out the
+    timeout."""
 
-    def _exchange(self, arr: np.ndarray) -> list[np.ndarray]:
-        payload = base64.b64encode(
-            np.ascontiguousarray(arr).tobytes()
-        ).decode("ascii")
-        dtype = arr.dtype
-        return [
-            np.frombuffer(base64.b64decode(m), dtype=dtype)
-            for m in self._ctx.allGather(payload)
-        ]
+    def __init__(self, listener, peers: list[str], rank: int, timeout: float):
+        self.size = len(peers)
+        self.rank = rank
+        self._timeout = timeout
+        self._left = self._right = None
+        try:
+            if self.size > 1:
+                host, port = peers[(rank + 1) % self.size].rsplit(":", 1)
+                self._right = socket.create_connection(
+                    (host, int(port)), timeout=timeout
+                )
+                listener.settimeout(timeout)
+                self._left, _ = listener.accept()
+                for s in (self._left, self._right):
+                    s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+                    s.setblocking(False)
+                # handshake: the accepted connection must be the left rank
+                got = np.zeros(1, dtype=np.int64)
+                self._sendrecv(np.array([rank], dtype=np.int64), got)
+                if int(got[0]) != (rank - 1) % self.size:
+                    raise ConnectionError(
+                        f"ring rank {rank} expected its left neighbour "
+                        f"{(rank - 1) % self.size}, got rank {int(got[0])}"
+                    )
+        except BaseException:
+            self.close()
+            raise
+        finally:
+            listener.close()
+
+    def close(self) -> None:
+        for s in (self._left, self._right):
+            if s is not None:
+                s.close()
+        self._left = self._right = None
+
+    def _sendrecv(self, out: np.ndarray, into: np.ndarray) -> None:
+        """Send ``out`` to the right neighbour while filling ``into`` from
+        the left one. The two directions interleave, so a chunk larger
+        than the socket buffers cannot deadlock the ring, where every rank
+        sends and receives in the same step."""
+        out = memoryview(out).cast("B")
+        into = memoryview(into).cast("B")
+        sent = got = 0
+        while sent < len(out) or got < len(into):
+            rd = [self._left] if got < len(into) else []
+            wr = [self._right] if sent < len(out) else []
+            rd, wr, _ = select.select(rd, wr, [], self._timeout)
+            if not rd and not wr:
+                raise TimeoutError(
+                    f"ring rank {self.rank}: no progress from a neighbour "
+                    f"in {self._timeout:.0f} s"
+                )
+            try:
+                if wr:
+                    sent += self._right.send(out[sent:])
+                if rd:
+                    n = self._left.recv_into(into[got:])
+                    if n == 0:
+                        raise ConnectionError(
+                            f"ring rank {self.rank}: left neighbour closed "
+                            "the connection mid-collective"
+                        )
+                    got += n
+            except BlockingIOError:
+                continue  # spurious readiness; select again
+
+    def _allreduce(self, buf: np.ndarray, combine) -> np.ndarray:
+        """In-place ring allreduce of the 1-D contiguous ``buf``. Chunk
+        ``i`` is ``buf[i*L//p : (i+1)*L//p]``; arrays shorter than the ring
+        leave some chunks empty, which both neighbours skip alike."""
+        p, r = self.size, self.rank
+        if p == 1:
+            return buf
+        cut = [(i * len(buf)) // p for i in range(p + 1)]
+
+        def chunk(i):
+            i %= p
+            return buf[cut[i] : cut[i + 1]]
+
+        scratch = np.empty(-(-len(buf) // p), dtype=buf.dtype)
+        try:
+            # reduce-scatter: after p-1 steps rank r owns chunk r+1 in full
+            for s in range(p - 1):
+                dst = chunk(r - s - 1)
+                tmp = scratch[: len(dst)]
+                self._sendrecv(chunk(r - s), tmp)
+                combine(dst, tmp, out=dst)
+            # allgather: pass the finished chunks once around the ring
+            for s in range(p - 1):
+                self._sendrecv(chunk(r - s + 1), chunk(r - s))
+        except BaseException:
+            self.close()
+            raise
+        return buf
 
     def allgather_sum_i64(self, arr: np.ndarray) -> np.ndarray:
-        out = np.zeros_like(arr)
-        for part in self._exchange(arr):
-            out += part.reshape(arr.shape)
-        return out
+        buf = np.array(arr, dtype=np.int64).ravel()
+        return self._allreduce(buf, np.add).reshape(np.shape(arr))
 
     def allgather_minmax(self, mn: np.ndarray, mx: np.ndarray):
-        parts = self._exchange(np.concatenate([mn, mx]))
+        # one pass: max(x) == -min(-x) exactly, so both ride np.minimum
         n = len(mn)
-        g_mn, g_mx = mn.copy(), mx.copy()
-        for part in parts:
-            g_mn = np.minimum(g_mn, part[:n])
-            g_mx = np.maximum(g_mx, part[n:])
-        return g_mn, g_mx
+        buf = np.concatenate([mn, -np.asarray(mx)]).astype(np.float64)
+        buf = self._allreduce(buf, np.minimum)
+        return buf[:n], -buf[n:]
 
 
 class HistGBMRegressor:
@@ -130,8 +221,9 @@ class HistGBMRegressor:
     sklearn-ish surface (``fit``/``predict``) so it slots into
     ``train_lightgbm_barrier``'s ``model_factory`` contract; network
     params the trainer injects (machines/local_listen_port/...) are
-    accepted and ignored — the collective is the barrier context, wired
-    in by the trainer via :meth:`set_barrier_comm`."""
+    accepted and ignored — the collective is a :class:`RingComm` the
+    trainer wires in via :meth:`set_barrier_comm`, and it lasts one
+    ``fit``."""
 
     def __init__(
         self,
@@ -156,10 +248,14 @@ class HistGBMRegressor:
         self.bin_mn_ = None
         self.bin_mx_ = None
 
-    def set_barrier_comm(self, ctx) -> None:
+    def set_barrier_comm(
+        self, listener, peers: list[str], rank: int, timeout: float
+    ) -> None:
         """Called by the barrier trainer; replaces the local collective
-        with allGather over the barrier stage's tasks."""
-        self._comm = BarrierComm(ctx)
+        with a :class:`RingComm` over the barrier tasks (``peers`` are
+        their ``host:port`` listeners in rank order). The next ``fit``
+        closes it."""
+        self._comm = RingComm(listener, peers, rank, timeout)
 
     # -- loss hooks (overridden by the classifier) -------------------------
     def _check_labels(self, y: np.ndarray) -> None:
@@ -200,6 +296,16 @@ class HistGBMRegressor:
         )
 
     def fit(self, X, y, sample_weight=None, **_ignored):
+        try:
+            return self._fit(X, y, sample_weight)
+        finally:
+            # sockets must not outlive the fit: the fitted model is
+            # pickled back to the driver
+            comm, self._comm = self._comm, LocalComm()
+            if hasattr(comm, "close"):
+                comm.close()
+
+    def _fit(self, X, y, sample_weight):
         X = np.asarray(X, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         n, n_feat = X.shape
@@ -266,10 +372,10 @@ class HistGBMRegressor:
         """One boosting round: K independent trees (one per channel —
         multiclass grows a tree per class, LightGBM-style), built
         LEVEL-SYNCHRONIZED so every depth merges the count/grad/hessian
-        histograms of ALL channels in ONE fused allGather (each round
-        trip costs ~2 s through the barrier coordinator). Channel-major
-        layout [k][cnt|gh|hh] makes K=1 byte-identical to the
-        single-tree protocol."""
+        histograms of ALL channels in ONE fused collective (one ring
+        allreduce per level, whatever K is). Channel-major layout
+        [k][cnt|gh|hh] makes K=1 byte-identical to the single-tree
+        protocol."""
         S = float(_SCALE)
         n_nodes = (1 << (self.max_depth + 1)) - 1
         nid = np.zeros((K, n), dtype=np.int64)  # heap ids; -1 = settled

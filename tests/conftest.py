@@ -11,12 +11,14 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # Two-tier suite (r14 verdict #8): the default gate run (`make test`,
 # `-m "not slow"`) must stay fast enough to run per-commit; the multi-JVM
-# cluster suites, SIGKILL/executor-loss recovery, and barrier-fit system
-# tests pay real JVM spin-ups and the 1 s/collective allGather floor
-# (docs/SCALE.md) and move to the `slow` tier, which CI's full pass
-# (`make test-full`) still runs green. Membership is by MODULE: each of
-# these files is dominated by multi-JVM or barrier-sleep wall time, so a
-# per-test split would save nothing and cost a marker audit.
+# cluster suites and SIGKILL/executor-loss recovery pay real JVM spin-ups
+# and injected-failure recovery waits, and move to the `slow` tier, which
+# CI's full pass (`make test-full`) still runs green. The histgbm fits
+# merge over their own socket ring (one barrier allGather per fit), so
+# their differential and system tests stay in the default tier.
+# Membership is by MODULE: each of these files is dominated by multi-JVM
+# or recovery wall time, so a per-test split would save nothing and cost
+# a marker audit.
 SLOW_MODULES = {
     "test_barrier_cluster",
     "test_cluster_differential",
@@ -24,15 +26,13 @@ SLOW_MODULES = {
     "test_cluster_streaming",
     "test_executor_loss",
     "test_fault_tolerance",
-    "test_histgbm_differential",
-    "test_histgbm_system",
 }
 
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: multi-JVM cluster / SIGKILL-recovery / barrier-fit tests "
+        "slow: multi-JVM cluster / SIGKILL-recovery tests "
         "(excluded from the default `make test` tier; `make test-full` "
         "runs everything)",
     )

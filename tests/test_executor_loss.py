@@ -18,6 +18,7 @@ must still complete and match the precomputed expected result.
 """
 
 import os
+import re
 import subprocess
 import sys
 
@@ -693,15 +694,19 @@ def test_stateful_stream_survives_executor_jvm_loss_mid_drain():
 # model can be asserted BIT-EQUAL to a clean local fit — the strongest
 # sandbox-available proof that an executor death mid-collective cannot
 # perturb the trained model. SIGKILL lands while the barrier stage is
-# active (statusTracker-gated, ~3 allGather rounds in); the barrier abort
-# gangs down the two survivors, the standalone worker relaunches a
-# replacement JVM, and the app-level retry re-forms a 3-task ring.
+# active (statusTracker-gated, 4 s in, with the fit sized to run well past
+# that); the barrier abort gangs down the two survivors, the standalone
+# worker relaunches a replacement JVM, and the app-level retry re-forms a
+# 3-task ring. The host test requires the scheduler's barrier-abort text,
+# so a kill that lands after the fit fails instead of passing silently.
 # ---------------------------------------------------------------------------
 
 HISTGBM_3NODE_SCRIPT = """
 import os
+import re
 import signal
 import subprocess
+import sys
 import threading
 import time
 
@@ -738,9 +743,13 @@ spark = (
 # path that restarts every executor.
 spark.sparkContext.setLogLevel("INFO")
 
+# sized so the barrier stage runs well past the 4 s kill delay (~15 s
+# cold on a 4-vCPU host): the ring's collectives take milliseconds, so
+# histogram work sets the wall
+N_ROWS, PARAMS = 6000, {"n_estimators": 2500, "max_depth": 4}
 rng = np.random.default_rng(42)
-X = rng.normal(size=(600, 5))
-y = X[:, 0] * 2.0 - X[:, 1] + 0.3 * rng.normal(size=600)
+X = rng.normal(size=(N_ROWS, 5))
+y = X[:, 0] * 2.0 - X[:, 1] + 0.3 * rng.normal(size=N_ROWS)
 pdf = pd.DataFrame({f"f{i}": X[:, i] for i in range(5)})
 pdf["target"] = y
 df = spark.createDataFrame(pdf)
@@ -769,26 +778,47 @@ while len(executor_pids()) < 3 and time.time() < deadline:
 before = executor_pids()
 assert len(before) >= 3, f"3 executors never came up: {before}"
 
+def executor_id(pid):
+    args = subprocess.run(
+        ["ps", "-o", "args=", "-p", str(pid)], capture_output=True, text=True
+    ).stdout
+    m = re.search(r"--executor-id\\s+(\\S+)", args)
+    return m.group(1) if m else None
+
+
 killed = {}
+
+
+def barrier_stage_running(tracker):
+    # the barrier stage is its job's ResultStage, which the scheduler
+    # numbers after the repartition's map stage: the job's highest id
+    active = set(tracker.getActiveStageIds())
+    for jid in tracker.getActiveJobsIds():
+        job = tracker.getJobInfo(jid)
+        if job is not None and job.stageIds and max(job.stageIds) in active:
+            return True
+    return False
 
 
 def kill_one_executor():
     # fire only once the barrier stage is actually RUNNING (statusTracker
-    # shows an active stage), then give it ~3 allGather rounds before the
-    # kill so the loss lands mid-collective, not pre-stage. The victim
+    # shows the job's result stage active; the cold map stage before it
+    # takes seconds), then give it 4 s before the kill so the loss lands
+    # mid-fit, past the rendezvous. The victim
     # MUST come from the pre-kill executor set (`before`): under load the
     # app retry may already be under way and executor_pids() can contain
     # replacement JVMs — killing one of those storms the respawn loop
     # (the r12 full-suite flake). Kill exactly one pre-kill-era pid, once.
     tracker = spark.sparkContext.statusTracker()
     deadline = time.time() + 120
-    while not tracker.getActiveStageIds() and time.time() < deadline:
+    while not barrier_stage_running(tracker) and time.time() < deadline:
         time.sleep(0.2)
     time.sleep(4.0)
     victims = [p for p in executor_pids() if p in before]
     if victims:
+        exec_id = executor_id(victims[0])
         os.kill(victims[0], signal.SIGKILL)
-        killed["pid"] = victims[0]
+        killed["pid"], killed["exec_id"] = victims[0], exec_id
 
 
 t = threading.Thread(target=kill_one_executor, daemon=True)
@@ -798,33 +828,39 @@ dist = core.train_lightgbm_barrier(
     feature_cols=[f"f{i}" for i in range(5)],
     label_col="target",
     model_factory=HistGBMRegressor,
-    params={"n_estimators": 4, "max_depth": 2},
+    params=PARAMS,
     num_workers=3,
 )
 t.join()
+# the host test reads only the log above this line: the executor churn of
+# the app's own shutdown must not pass for the survivor race
+print("HISTGBM_3NODE_FIT_DONE", file=sys.stderr, flush=True)
 
 assert "pid" in killed, "killer never fired"
+assert killed["exec_id"], "victim's --executor-id not found"
 after = executor_pids()
 assert killed["pid"] not in after
 # a replacement JVM joined before the retry's ring formed
 assert set(after) - set(before), (before, after)
 # NOTE deliberately NOT asserted here: that a pre-kill peer survived.
-# This fit spends nearly all its wall inside Python-side allGather
-# (the ~1 s/level poll floor), so the stage abort almost always lands
-# mid-collective and hits an upstream Spark race: the survivors'
-# barrier-serving thread (BasePythonRunner$Writer.barrierAndServe,
-# thread "accept-connections") takes TaskKilledException OUTSIDE any
-# task, SparkUncaughtExceptionHandler treats it as fatal, and the
-# survivor JVMs exit 50 alongside the victim. Executor survival is
-# Spark's lifecycle, not this engine's recovery contract; the
-# survivor+replacement ring topology stays pinned by
-# test_training_ring_reforms_with_replacement_and_surviving_peer,
-# whose stub fit's collectives are brief enough to dodge the race.
+# A stage abort that lands while a survivor's task is inside a barrier
+# allGather (here only the one rendezvous at stage start; the fit itself
+# reduces over the socket ring) hits an upstream Spark race: the
+# survivors' barrier-serving thread
+# (BasePythonRunner$Writer.barrierAndServe, thread "accept-connections")
+# takes TaskKilledException OUTSIDE any task,
+# SparkUncaughtExceptionHandler treats it as fatal, and the survivor JVMs
+# exit 50 alongside the victim. Executor survival is Spark's lifecycle,
+# not this engine's recovery contract; the host test checks survivors
+# only when that race left no trace, and the survivor+replacement ring
+# topology stays pinned by
+# test_training_ring_reforms_with_replacement_and_surviving_peer.
 survivors = sorted(set(after) & set(before))
 print("HISTGBM_3NODE_TOPOLOGY", sorted(before), sorted(after), survivors)
+print("HISTGBM_3NODE_VICTIM", killed["pid"], killed["exec_id"])
 
 # the recovered distributed model is BIT-equal to a clean local fit
-local = HistGBMRegressor(n_estimators=4, max_depth=2).fit(X, y)
+local = HistGBMRegressor(**PARAMS).fit(X, y)
 p_dist, p_local = dist.predict(X), local.predict(X)
 assert np.array_equal(p_dist, p_local), "recovered model != clean fit"
 # and it learned (bit-equality of two broken fits proves nothing)
@@ -848,6 +884,13 @@ def test_histgbm_3node_fit_survives_loss_bit_equal():
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-4000:]}"
     )
     assert "HISTGBM_3NODE_LOSS_OK" in proc.stdout
+    # the kill must have aborted the barrier stage (and the returned model
+    # then came from the app-level retry): a kill that lands after the fit
+    # leaves no abort in the scheduler log and fails here
+    assert "Could not recover from a failed barrier ResultStage" in proc.stderr, (
+        "the SIGKILL did not abort the barrier stage; stderr tail:\n"
+        f"{proc.stderr[-2000:]}"
+    )
     # partial survivor coverage (r15 advisor): the in-script survivor
     # assert was dropped because an upstream Spark race can exit the
     # SURVIVOR JVMs with code 50 (barrierAndServe takes
@@ -864,17 +907,28 @@ def test_histgbm_3node_fit_survives_loss_bit_equal():
     # SparkUncaughtExceptionHandler (the barrierAndServe race) — INFO
     # level in the script makes it observable on proc.stderr; the two
     # legacy spellings are kept for other log sources. "unknown executor"
-    # status updates are the same churn seen from the Master's side
-    # (a removed-but-still-running executor phoning in — impossible for
-    # the SIGKILLed victim, so it always means a non-victim churned).
+    # status updates are the same churn seen from the Master's side (a
+    # removed-but-still-running executor phoning in), but the SIGKILLed
+    # victim can send one too (sent before the kill, processed after its
+    # removal), so only an update naming ANOTHER executor id counts.
     race_markers = (
         "SparkUncaughtExceptionHandler",
         "exitCode 50",
         "exit code 50",
         "exited with code 50",
-        "Got status update for unknown executor",
     )
-    race_fired = any(m in proc.stderr for m in race_markers)
+    victim = [
+        ln for ln in proc.stdout.splitlines() if ln.startswith("HISTGBM_3NODE_VICTIM")
+    ]
+    assert victim, proc.stdout
+    victim_id = victim[0].split()[-1]
+    fit_log = proc.stderr.split("HISTGBM_3NODE_FIT_DONE")[0]
+    unknown_ids = re.findall(
+        r"Got status update for unknown executor \S+/(\S+)", fit_log
+    )
+    race_fired = any(m in fit_log for m in race_markers) or any(
+        i != victim_id for i in unknown_ids
+    )
     survivors = topo[0].split("] [")[-1].rstrip("]").strip("[ ")
     if not race_fired:
         assert survivors, (

@@ -53,8 +53,8 @@ def test_distributed_fit_bit_equal_to_local(spark):
     pdf["target"] = y
     df = spark.createDataFrame(pdf)
 
-    # 6x2 keeps the barrier-coordinator round count low (~2 s per
-    # allGather); the bit-equality claim is config-independent
+    # 6 trees x depth 2 keeps the fit small; the bit-equality claim is
+    # config-independent
     dist = core.train_lightgbm_barrier(
         df,
         feature_cols=[f"f{i}" for i in range(5)],
@@ -73,9 +73,9 @@ def test_distributed_fit_bit_equal_to_local(spark):
 
 
 def test_collective_model_refuses_empty_partition(spark):
-    """allGather blocks until every task in the barrier stage calls it, so
-    an empty partition that exits early would DEADLOCK the collective —
-    the task must refuse with an actionable error instead."""
+    """The collective ring needs every task in the barrier stage, so an
+    empty partition that exits early would leave a hole in it — the task
+    must refuse with an actionable error instead."""
     from dask_lightgbm_spark import core
     from dask_lightgbm_spark.histgbm import HistGBMRegressor
 
@@ -158,8 +158,8 @@ print("HISTGBM_TWO_JVM_BIT_EQUAL_OK")
 
 def test_two_jvm_distributed_fit_bit_equal_to_local():
     """The histogram merge crosses REAL process boundaries: one barrier
-    task per executor JVM on local-cluster[2,2], allGather payloads over
-    the barrier coordinator, and the model still matches the driver-local
+    task per executor JVM on local-cluster[2,2], histograms over the
+    tasks' socket ring, and the model still matches the driver-local
     fit bit-for-bit. No lightgbm stub on PYTHONPATH — this is the
     wheel-free distributed-GBM path standing on its own."""
     env = dict(os.environ)
@@ -636,3 +636,133 @@ def test_quantile_estimator_save_load_round_trip(spark, tmp_path):
     a = reg.transform(df, feature_cols=cols).toPandas()["prediction"]
     b = reg2.transform(df, feature_cols=cols).toPandas()["prediction"]
     assert np.array_equal(a.to_numpy(), b.to_numpy())
+
+
+# ---------------------------------------------------------------------------
+# RingComm over localhost sockets, no Spark: one thread per rank, each with
+# its own listener, exactly as the barrier trainer wires them.
+# ---------------------------------------------------------------------------
+
+
+def _run_ring(size, work, timeout=30.0, join_s=60.0):
+    """Run ``work(rank, comm)`` on ``size`` threads joined into one ring;
+    return (results, errors) by rank."""
+    import socket
+    import threading
+
+    from dask_lightgbm_spark.histgbm import RingComm
+
+    listeners = [socket.create_server(("127.0.0.1", 0)) for _ in range(size)]
+    peers = [f"127.0.0.1:{ls.getsockname()[1]}" for ls in listeners]
+    out, errs = [None] * size, [None] * size
+
+    def run(rank):
+        comm = None
+        try:
+            comm = RingComm(listeners[rank], peers, rank, timeout)
+            out[rank] = work(rank, comm)
+        except Exception as exc:  # noqa: BLE001 — reported by rank
+            errs[rank] = exc
+        finally:
+            if comm is not None:
+                comm.close()
+
+    ts = [threading.Thread(target=run, args=(r,), daemon=True) for r in range(size)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(join_s)
+    assert not any(t.is_alive() for t in ts), "ring collective hung"
+    return out, errs
+
+
+@pytest.mark.parametrize("size", [1, 2, 3, 4, 5])
+@pytest.mark.parametrize("length", [1, 3, 4097])
+def test_ring_comm_reductions_equal_numpy(size, length):
+    """Sums and min/max over 1-5 ranks equal numpy's on the stacked
+    arrays exactly, including arrays shorter than the ring (empty
+    chunks) and int64 sums that wrap."""
+    rng = np.random.default_rng([size, length])
+    ints = rng.integers(-(2**62), 2**62, size=(size, length), dtype=np.int64)
+    mins = rng.normal(size=(size, length))
+    maxs = rng.normal(size=(size, length))
+
+    def work(rank, comm):
+        s = comm.allgather_sum_i64(ints[rank])
+        mn, mx = comm.allgather_minmax(mins[rank], maxs[rank])
+        return s, mn, mx
+
+    out, errs = _run_ring(size, work)
+    assert errs == [None] * size, errs
+    with np.errstate(over="ignore"):
+        want = ints.sum(axis=0)
+    for s, mn, mx in out:
+        assert s.dtype == np.int64 and np.array_equal(s, want)
+        assert np.array_equal(mn, mins.min(axis=0))
+        assert np.array_equal(mx, maxs.max(axis=0))
+
+
+def test_ring_comm_large_payload_does_not_deadlock():
+    """16 MiB per rank on a 2-ring puts 8 MiB in each chunk, more than a
+    socket send buffer plus the peer's receive window hold: a ring that
+    sent before receiving would block both ranks in send forever."""
+    n = 2 * 1024 * 1024  # int64 -> 16 MiB
+    arrs = [np.arange(n, dtype=np.int64) * (r + 1) for r in range(2)]
+
+    out, errs = _run_ring(2, lambda r, c: c.allgather_sum_i64(arrs[r]))
+    assert errs == [None, None], errs
+    want = np.arange(n, dtype=np.int64) * 3
+    assert all(np.array_equal(o, want) for o in out)
+
+
+def test_ring_comm_peer_closing_mid_collective_raises_promptly():
+    """A rank that leaves after one collective makes every other rank's
+    next collective raise well inside the socket timeout: the closed
+    connection is seen at once, and each failing rank closes its own
+    sockets so the failure travels around the ring."""
+    import time
+
+    def work(rank, comm):
+        comm.allgather_sum_i64(np.ones(64, dtype=np.int64))
+        if rank == 2:
+            comm.close()
+            return "left"
+        t0 = time.perf_counter()
+        try:
+            comm.allgather_sum_i64(np.ones(64, dtype=np.int64))
+        except OSError as exc:
+            return time.perf_counter() - t0, exc
+        return "completed"
+
+    out, errs = _run_ring(4, work, timeout=120.0)
+    assert errs == [None] * 4, errs
+    assert out[2] == "left"
+    for rank in (0, 1, 3):
+        waited, exc = out[rank]
+        assert waited < 10.0, (rank, waited, exc)
+
+
+def test_ring_fitted_model_pickles_and_matches_local():
+    """A model fitted through the ring releases its sockets when fit
+    returns, so it pickles (the trainer ships it back to the driver that
+    way), and the unpickled model predicts bit-equal to a local fit."""
+    import pickle
+
+    from dask_lightgbm_spark.histgbm import HistGBMClassifier, LocalComm
+
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(300, 4))
+    y = (X[:, 0] - X[:, 3] > 0).astype(float)
+    shards = np.array_split(np.arange(len(y)), 3)
+
+    def work(rank, comm):
+        m = HistGBMClassifier(n_estimators=5, max_depth=3)
+        m._comm = comm
+        return m.fit(X[shards[rank]], y[shards[rank]])
+
+    models, errs = _run_ring(3, work)
+    assert errs == [None] * 3, errs
+    assert isinstance(models[0]._comm, LocalComm)
+    back = pickle.loads(pickle.dumps(models[0]))
+    local = HistGBMClassifier(n_estimators=5, max_depth=3).fit(X, y)
+    assert np.array_equal(back.predict_proba(X), local.predict_proba(X))

@@ -10,22 +10,15 @@ wide INTEGER features, >= 4k rows, learnable-but-noisy target, fit
 distributed over 4 barrier tasks on local[4], predictions via the
 distributed ``transform`` path.
 
-Tree-count compromise (documented per the r11 verdict): the reference uses
-n_estimators=50, but every histgbm boosting LEVEL costs one
-``BarrierTaskContext.allGather`` with a measured 1.00 s floor (r13,
-tools/profile_allgather.py: the reply wait in Spark 4.1.2's
-``BarrierTaskContext#runBarrier`` is a HARDCODED ``Thread.sleep(1000L)``
-poll — payload- and conf-independent), so 50 trees x 4 levels ~= 200+ s
-per fit in this sandbox. n_estimators=10 x max_depth=3 x learning_rate=0.4
-(30 collectives, ~40 s) scores 0.93 accuracy / 0.985 R^2 on this data —
-far above the 0.8 thresholds — and histgbm's distributed-vs-local
-bit-equality (tests/test_histgbm_differential.py) makes the extra trees
-pure runtime, not coverage: the distributed math is identical at any
-n_estimators. Quantile objective is not repeated here — it has its own
-bit-equal differential + coverage pins (r11).
+The tree count is the reference's too (``n_estimators=50``,
+system_tests/test_fit_predict.py:30), at max_depth=3 and
+learning_rate=0.4. Every boosting level merges its histograms over the
+barrier tasks' socket ring (histgbm.RingComm), so the fit pays one Spark
+collective in all, not one per level. Quantile objective is not repeated
+here — it has its own bit-equal differential + coverage pins.
 
-Measured runtimes (local[4], 32-core host, r12): classifier fit ~42 s,
-regressor fit ~40 s.
+Measured runtimes (local[4], 4-vCPU host): ~2.5 s per test, fit and
+distributed predict included.
 """
 
 import time
@@ -63,7 +56,7 @@ def test_classify_distributed_histgbm_threshold(spark, covtype_df):
     df, pdf = covtype_df
     feats = [c for c in pdf.columns if c != "target"]
     clf = SparkLGBMClassifier(
-        n_estimators=10, max_depth=3, learning_rate=0.4,
+        n_estimators=50, max_depth=3, learning_rate=0.4,
         backend="histgbm", num_workers=4,
     )
     t0 = time.time()
@@ -97,7 +90,7 @@ def test_regress_distributed_histgbm_threshold(spark):
     df = spark.createDataFrame(pdf).repartition(4)
 
     reg = SparkLGBMRegressor(
-        n_estimators=10, max_depth=3, learning_rate=0.4,
+        n_estimators=50, max_depth=3, learning_rate=0.4,
         backend="histgbm", num_workers=4,
     )
     t0 = time.time()

@@ -1775,11 +1775,11 @@ def main():
     # SPARK_GRAFT_SF1_SPOT=0.
     if at_sf01 and os.environ.get("SPARK_GRAFT_SF1_SPOT", "1") != "0":
         try:
-            from dask_lightgbm_spark.queries import _ship_package
             from dask_lightgbm_spark.queries import similarity as S
             from dask_lightgbm_spark.session import scratch_dir
+            from dask_lightgbm_spark.shipping import ship_package
 
-            _ship_package(spark)  # artifact build bypasses the query wrapper
+            ship_package(spark)  # artifact build bypasses the query wrapper
             sf1_dir = ensure_sf1(sf_dir)
             # Build the ANN index artifacts ONCE on the Spark side (the
             # build-once/serve-many topology both engines then measure from)

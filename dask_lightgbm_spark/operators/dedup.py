@@ -1142,13 +1142,16 @@ def minhash_lsh_match_against(
     the join key gains the group id and no reducer holds more than ~cap
     corpus rows per new doc. Match set unchanged (every corpus row keeps
     exactly one group; the new side covers all groups)."""
-    # NO persist (r8): the shingle arrays are scan-local projections, so
-    # the verify join's second use recomputes them — at 100 TB, re-running
-    # a projection beats caching corpus-sized arrays in executor memory,
-    # and repeated invocations leave nothing behind in the CacheManager
-    # (the r7 advisor's accumulation finding; an earlier persist here also
-    # let identical re-invocations silently serve from cache, which is not
-    # a result a benchmark or a retry should get for free).
+    # NO persist of the corpus band/shingle tables (r8): they are scan-local
+    # projections, so their second use recomputes them — at 100 TB,
+    # re-running a projection beats caching corpus-sized arrays in executor
+    # memory. The one thing a batch call caches is the output-bounded
+    # candidate set inside minhash_lsh_match_against_index (the verify-side
+    # pre-filter); it is registered with track_lazy_persist, so
+    # release_caches() empties the CacheManager again (the r7 advisor's
+    # accumulation finding). Until that release, an identical re-invocation
+    # serves the candidate set from cache — bench legs that time this path
+    # should time it cold.
     bands_cor, arr_cor = build_minhash_band_index(
         corpus_df, id_col, text_col, k_shingle, num_perm, band_size
     )
@@ -1319,9 +1322,13 @@ def minhash_lsh_match_against_index(
     # after the filter too, so the second corpus-wide kernel pass becomes
     # a candidates-only pass. Match set unchanged — a left-semi on the
     # inner join's own key set is an identity on the join result.
-    # Streaming callers keep the un-filtered plan (a stream-derived cand
-    # cannot be persisted or re-consumed; x14 has its own topology).
-    if not new_df.isStreaming:
+    # A streaming input on EITHER side keeps the un-filtered plan: cand then
+    # derives from a stream and cannot be persisted or re-consumed (x14 has
+    # its own topology).
+    if not any(
+        d is not None and d.isStreaming
+        for d in (new_df, corpus_bands, corpus_verify, _corpus_text)
+    ):
         from dask_lightgbm_spark.session import track_lazy_persist
 
         cand = track_lazy_persist(cand.persist())

@@ -7,10 +7,10 @@ vector as M single-byte codes, and answer queries with asymmetric distance
 computation (ADC) — exact query sub-vector vs the code's centroid.
 
 Scale story (100 TB): the codebooks are M×K×(d/M) doubles — kilobytes —
-held on the driver and embedded as literals, so BOTH the corpus encoding
-and the ADC scan are pure zero-shuffle projections over the corpus
-(whole-stage-codegen'd distance folds; memory per vector drops from
-d×4 bytes float to M bytes of codes — 64× here). The only shuffle in the
+held on the driver and shipped in the kernel closures, so BOTH the corpus
+encoding and the ADC scan are zero-shuffle Arrow kernels over the corpus
+(dimension-ordered ``functions.blockfold`` folds; memory per vector drops
+from d×4 bytes float to M bytes of codes — 64× here). The only shuffle in the
 whole query is the per-query top-k window. Encoding cost is amortizable
 exactly like the IVF cell assignment (build once, serve many — s15).
 
@@ -26,11 +26,60 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dask_lightgbm_spark.operators.kmeans import sq_dist
-from dask_lightgbm_spark.operators.similarity import to_double_array
+from dask_lightgbm_spark.operators.similarity import to_double_array, top_k_rank
 
 
 def _lit_arr(vals: list[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in vals])
+
+
+def _plain_books(codebooks):
+    """Codebooks as plain (int cid, float list) pairs sorted by cid — the
+    picklable closure form the kernels rebuild their matrices from."""
+    return [
+        sorted((int(c), [float(x) for x in cv]) for c, cv in book)
+        for book in codebooks
+    ]
+
+
+def _adc_scorer(Q, books, who: str):
+    """Executor-side ADC for the (n_q, d) query matrix ``Q`` against the
+    sorted ``books`` (:func:`_plain_books`). Builds one LUT per subspace —
+    ``fold_sq_dists`` of the queries' m-th sub-vector against the book's
+    centroids (n_q x K), the dim-ordered subtract-multiply-add sequence of
+    the interpreted ``sq_dist`` fold — and returns ``score(pdf)``, which maps
+    a batch's ``code_0..code_{M-1}`` columns to the (n_q x n) distances
+    ((lut0 + lut1) + lut2) + ..., the fixed-order subspace sum of the
+    expression plan. LUT columns are positional over the sorted book while
+    codes are cid VALUES: a code absent from the book (a gapped-cid
+    mis-encode, or mismatched codebooks) raises instead of mis-scoring."""
+    import numpy as np
+
+    from dask_lightgbm_spark.functions.blockfold import fold_sq_dists
+
+    sub = len(books[0][0][1])
+    tables = []
+    for m, book in enumerate(books):
+        C = np.asarray([cv for _, cv in book], dtype=np.float64)
+        cids = np.asarray([c for c, _ in book], dtype=np.int64)
+        tables.append((cids, fold_sq_dists(Q[:, m * sub : (m + 1) * sub], C)))
+
+    def score(pdf):
+        dist = None
+        for m, (cids, lut) in enumerate(tables):
+            codes = pdf[f"code_{m}"].values.astype(np.int64)
+            pos = np.clip(np.searchsorted(cids, codes), 0, len(cids) - 1)
+            if not np.array_equal(cids[pos], codes):
+                raise ValueError(
+                    f"{who}: subspace {m} has codes not present in the "
+                    "codebook (codes must be cid values from the same "
+                    "train_codebooks output)"
+                )
+            d_m = lut[:, pos]
+            dist = d_m if dist is None else dist + d_m
+        return dist
+
+    return score
 
 
 def code_centroid(book: list[tuple[int, list[float]]], code: Column) -> Column:
@@ -160,10 +209,7 @@ def encode_pq(
     pytest-proven against :func:`encode_pq_interpreted`). All M subspaces
     encode in one corpus pass; zero shuffle."""
     sub = len(codebooks[0][0][1])
-    books = [
-        sorted((int(c), [float(x) for x in cv]) for c, cv in book)
-        for book in codebooks
-    ]
+    books = _plain_books(codebooks)
 
     def kernel(batches):
         import numpy as np
@@ -206,33 +252,24 @@ def ivf_pq_serve_topk(
     """Vectorized IVF-PQ serve (the s18 hot path): ADC top-k within each
     query's cell for a BOUNDED query batch. Same result bit-for-bit as the
     declarative cell-join + per-candidate ``sq_dist(slice, code_centroid)``
-    expression plan (kept in the caller for the pytest parity proof); the
-    difference is execution — Spark interprets the per-candidate HOF folds
-    and the element_at centroid-map lookups row by row, while this kernel
-    scores each corpus partition's candidates against per-query LUTs (the
-    :func:`pq_knn` vectorized machinery) and emits only its per-partition
-    top-k per query.
+    expression plan (the parity reference in tests/test_similarity.py);
+    the difference is execution — Spark interprets the per-candidate HOF
+    folds and the element_at centroid-map lookups row by row, while this
+    kernel scores each corpus partition's candidates against per-query
+    LUTs (:func:`_adc_scorer`, shared with :func:`pq_knn`) and emits only
+    its per-partition top-k per query.
 
     ``corpus`` columns: (nid, cell, code_0..code_{M-1}).
     ``queries_assigned`` columns: (qid, qv, cell) — ≤ ``max_queries`` rows,
     shipped in the kernel closure (the ivf_serve_topk boundedness contract).
 
-    Bit-exactness: LUT entry (q, m, code) = fold_sq_dists on the query's
-    m-th sub-vector vs the code's centroid — the identical dim-ordered
-    subtract-multiply-add sequence as the interpreted fold (pytest-proven
-    in pq_knn's parity test) — and the candidate distance is the same
-    fixed-order sum over subspaces. Per-partition top-k under the total
+    Bit-exactness: see :func:`_adc_scorer` (pytest-proven against the
+    expression plan for both kernels). Per-partition top-k under the total
     order (adc_dist asc, nid asc) distributes over partitions, so the
     final window over ≤ partitions×k rows per query picks the identical
     global top-k. Output: (qid, nid, rank, adc_dist)."""
-    from pyspark.sql import Window as W
-
-    sub = len(codebooks[0][0][1])
     n_sub = len(codebooks)
-    books = [
-        sorted((int(c), [float(x) for x in cv]) for c, cv in book)
-        for book in codebooks
-    ]
+    books = _plain_books(codebooks)
     q_rows = queries_assigned.select("qid", "qv", "cell").collect()
     if len(q_rows) > max_queries:
         raise ValueError(
@@ -256,47 +293,33 @@ def ivf_pq_serve_topk(
         import numpy as np
         import pandas as pd
 
-        from dask_lightgbm_spark.functions.blockfold import fold_sq_dists
+        from dask_lightgbm_spark.functions.blockfold import top_k_block
+        from dask_lightgbm_spark.operators.pq import _adc_scorer
 
-        # per cell: (qids, per-subspace LUT list [Q x K], cid tables)
-        qluts = {}
-        for c, qs in by_cell.items():
-            qids = np.asarray([q for q, _ in qs], dtype=np.int64)
-            Q = np.asarray([qv for _, qv in qs], dtype=np.float64)
-            luts, lut_cids = [], []
-            for m, book in enumerate(books):
-                C = np.asarray([cv for _, cv in book], dtype=np.float64)
-                lut_cids.append(np.asarray([cc for cc, _ in book], dtype=np.int64))
-                luts.append(fold_sq_dists(Q[:, m * sub : (m + 1) * sub], C))
-            qluts[c] = (qids, luts, lut_cids)
+        # per cell: (qids, ADC scorer over that cell's query LUTs)
+        scorers = {
+            c: (
+                np.asarray([q for q, _ in qs], dtype=np.int64),
+                _adc_scorer(
+                    np.asarray([qv for _, qv in qs], dtype=np.float64),
+                    books,
+                    "ivf_pq_serve_topk",
+                ),
+            )
+            for c, qs in by_cell.items()
+        }
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             out_q, out_n, out_d = [], [], []
             for c, grp in pdf.groupby("cell", sort=False):
-                qids, luts, lut_cids = qluts[int(c)]
+                qids, score = scorers[int(c)]
                 nid = grp["nid"].values.astype(np.int64)
-                dist = None
-                for m in range(n_sub):
-                    codes = grp[f"code_{m}"].values.astype(np.int64)
-                    pos = np.clip(
-                        np.searchsorted(lut_cids[m], codes), 0, len(lut_cids[m]) - 1
-                    )
-                    if not np.array_equal(lut_cids[m][pos], codes):
-                        raise ValueError(
-                            f"ivf_pq_serve_topk: subspace {m} has codes not "
-                            "present in the codebook (codes must be cid "
-                            "values from the same train_codebooks output)"
-                        )
-                    d_m = luts[m][:, pos]  # Q x n
-                    dist = d_m if dist is None else dist + d_m
-                for j, q_id in enumerate(qids):
-                    mask = nid != q_id
-                    cand_n, cand_d = nid[mask], dist[j][mask]
-                    order = np.lexsort((cand_n, cand_d))[:k]
-                    out_q.append(np.full(len(order), q_id, dtype=np.int64))
-                    out_n.append(cand_n[order])
-                    out_d.append(cand_d[order])
+                dist = score(grp)  # Q x n
+                r, j = top_k_block(dist.T, nid, qids, k, descending=False)
+                out_q.append(qids[j])
+                out_n.append(nid[r])
+                out_d.append(dist[j, r])
             if out_q:
                 yield pd.DataFrame(
                     {
@@ -315,12 +338,7 @@ def ivf_pq_serve_topk(
         )
         .mapInPandas(kernel, "qid long, nid long, adc_dist double")
     )
-    w = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("nid"))
-    return (
-        part_topk.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "adc_dist")
-    )
+    return top_k_rank(part_topk, k, "adc_dist", ascending=True)
 
 
 def pq_knn(
@@ -331,123 +349,56 @@ def pq_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     encoded: DataFrame | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """ADC top-k: approximate distance from each query (exact sub-vectors)
     to each corpus vector (codes only) = fixed-order sum over subspaces of
-    sqdist(query sub-vector, code centroid). Per-code centroid lookup is an
-    element_at into a literal array-of-arrays, so scoring is again a pure
-    projection; the sole shuffle is the per-query top-k window.
+    sqdist(query sub-vector, code centroid).
 
     Output: (qid, nid, rank, adc_dist).
 
-    ``vectorized`` (default) scores in an Arrow kernel: the queries are
-    collected driver-side (a serve batch is small by design — same
-    boundedness argument as broadcasting them), per-query LUTs
-    (Q × K sqdist entries per subspace) are built INSIDE the kernel with
-    dimension-ordered accumulation, and each corpus row's distance is
-    ((lut0 + lut1) + lut2) + lut3 — the identical IEEE op sequence as the
-    interpreted element_at/fold expression path (kept below for the pytest
-    parity proof). The top-k window is unchanged either way."""
-    sub = len(codebooks[0][0][1])
+    Scores in an Arrow kernel: the queries are collected driver-side (a
+    serve batch is small by design — same boundedness argument as
+    broadcasting them), per-query LUTs (Q × K sqdist entries per subspace)
+    are built INSIDE the kernel with dimension-ordered accumulation, and
+    each corpus row's distance is ((lut0 + lut1) + lut2) + lut3 — the
+    identical IEEE op sequence as the interpreted
+    ``sq_dist(slice, code_centroid)`` expression plan (pytest-proven
+    against it). Each batch keeps its top-k per query; one window ranks
+    the union."""
     enc = encoded if encoded is not None else encode_pq(df, codebooks, id_col, vec_col)
     n_sub = len(codebooks)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("nid"))
-    if vectorized:
-        books = [
-            sorted((int(c), [float(x) for x in cv]) for c, cv in book)
-            for book in codebooks
-        ]
-        q_rows = sorted(
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in df.filter(queries_filter).select(id_col, vec_col).collect()
-        )
-        if not q_rows:
-            # contract parity with the expression path: empty query set ->
-            # empty result, not an error
-            return df.sparkSession.createDataFrame(
-                [], "qid long, nid long, rank int, adc_dist double"
-            )
-
-        def kernel(batches):
-            import numpy as np
-            import pandas as pd
-
-            from dask_lightgbm_spark.functions.blockfold import fold_sq_dists
-
-            qids = np.asarray([q for q, _ in q_rows], dtype=np.int64)
-            Q = np.asarray([qv for _, qv in q_rows], dtype=np.float64)
-            luts, lut_cids = [], []
-            for m, book in enumerate(books):
-                C = np.asarray([cv for _, cv in book], dtype=np.float64)
-                lut_cids.append(np.asarray([c for c, _ in book], dtype=np.int64))
-                luts.append(fold_sq_dists(Q[:, m * sub : (m + 1) * sub], C))  # Q x K
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                nid = pdf["nid"].astype("int64").values
-                dist = None
-                for m in range(len(books)):
-                    # LUT columns are positional over the sorted book; codes
-                    # are cid VALUES — map value → position, loud on a code
-                    # absent from the book (gapped-cid mis-encode or
-                    # mismatched codebooks would otherwise mis-score)
-                    codes = pdf[f"code_{m}"].values.astype(np.int64)
-                    pos = np.clip(
-                        np.searchsorted(lut_cids[m], codes), 0, len(lut_cids[m]) - 1
-                    )
-                    if not np.array_equal(lut_cids[m][pos], codes):
-                        raise ValueError(
-                            f"pq_knn: subspace {m} has codes not present in "
-                            "the codebook (codes must be cid values from the "
-                            "same train_codebooks output)"
-                        )
-                    d_m = luts[m][:, pos]  # Q x n
-                    dist = d_m if dist is None else dist + d_m
-                # partial top-k per query within this batch (see
-                # brute_force_knn): only k rows per (query, batch) leave
-                # the kernel; global top-k over the union is identical
-                # because every global winner is its batch's winner too.
-                out_q, out_n, out_d = [], [], []
-                for j, q_id in enumerate(qids):
-                    mask = nid != q_id
-                    cand_n, cand_d = nid[mask], dist[j][mask]
-                    order = np.lexsort((cand_n, cand_d))[:k]
-                    out_q.append(np.full(len(order), q_id, dtype=np.int64))
-                    out_n.append(cand_n[order])
-                    out_d.append(cand_d[order])
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "adc_dist": np.concatenate(out_d),
-                    }
-                )
-
-        scored = enc.select(
-            F.col(id_col).alias("nid"), *[f"code_{m}" for m in range(n_sub)]
-        ).mapInPandas(kernel, "qid long, nid long, adc_dist double")
-    else:
-        queries = df.filter(queries_filter).select(
-            F.col(id_col).alias("qid"),
-            to_double_array(vec_col).alias("qv"),
-        )
-        pairs = enc.select(
-            F.col(id_col).alias("nid"), *[F.col(f"code_{m}") for m in range(n_sub)]
-        ).join(F.broadcast(queries), F.col("nid") != F.col("qid"))
-        # literal codebook per subspace, keyed by cid value (gapped-safe)
-        dist = None
-        for m, book in enumerate(codebooks):
-            d_m = sq_dist(
-                F.slice("qv", 1 + m * sub, sub),
-                code_centroid(book, F.col(f"code_{m}")),
-            )
-            dist = d_m if dist is None else dist + d_m
-        scored = pairs.withColumn("adc_dist", dist)
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "adc_dist")
+    books = _plain_books(codebooks)
+    q_rows = sorted(
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in df.filter(queries_filter).select(id_col, vec_col).collect()
     )
+    if not q_rows:
+        return df.sparkSession.createDataFrame(
+            [], "qid long, nid long, rank int, adc_dist double"
+        )
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        from dask_lightgbm_spark.functions.blockfold import top_k_block
+        from dask_lightgbm_spark.operators.pq import _adc_scorer
+
+        qids = np.asarray([q for q, _ in q_rows], dtype=np.int64)
+        score = _adc_scorer(
+            np.asarray([qv for _, qv in q_rows], dtype=np.float64), books, "pq_knn"
+        )
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            nid = pdf["nid"].astype("int64").values
+            dist = score(pdf)  # Q x n
+            r, j = top_k_block(dist.T, nid, qids, k, descending=False)
+            yield pd.DataFrame(
+                {"qid": qids[j], "nid": nid[r], "adc_dist": dist[j, r]}
+            )
+
+    scored = enc.select(
+        F.col(id_col).alias("nid"), *[f"code_{m}" for m in range(n_sub)]
+    ).mapInPandas(kernel, "qid long, nid long, adc_dist double")
+    return top_k_rank(scored, k, "adc_dist", ascending=True)

@@ -1,13 +1,18 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Pure built-in higher-order functions — the dot/norm folds run inside
-whole-stage codegen (F.zip_with + F.aggregate), no Python boundary.
+The declarative plans score with built-in higher-order functions
+(F.zip_with + F.aggregate), no Python boundary. Spark does not codegen
+HOF lambdas, so those folds run interpreted, row by row; the hot paths
+(``brute_force_knn``, ``ivf_serve_topk``, ``assign_cells_vectorized``)
+therefore score in Arrow kernels with the dimension-ordered
+``functions.blockfold`` helpers, which reproduce the folds' doubles
+bit-for-bit.
 
 Scale design:
-- ``brute_force_knn`` broadcasts the (small) query set against the full
-  corpus: a broadcast-nested-loop with per-row folds → embarrassingly
-  parallel map over corpus partitions, one narrow top-k reduction. Right
-  answer for "few queries × huge corpus".
+- ``brute_force_knn`` ships the (small) query set to every corpus
+  partition: an embarrassingly parallel map that keeps each partition's
+  top-k per query, then one narrow global top-k window. Right answer for
+  "few queries × huge corpus".
 - ``ivf_knn`` is the scale path for "many queries": assign every vector to
   its nearest centroid (broadcast centroids), then search only within the
   query's cell — an equi-join on cell id instead of a cross product,
@@ -65,167 +70,115 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
+def top_k_rank(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    ascending: bool = False,
+    qid: str = "qid",
+    nid: str = "nid",
+) -> DataFrame:
+    """Global top-k per ``qid`` under (``score`` desc|asc, ``nid`` asc):
+    rows ``rank`` 1..k (int, ``row_number``), output (qid, nid, rank,
+    score). Desc sorts NULL scores last, as the oracle SQL's window does.
+    The Spark-side tail of every kNN plan; the kernels feed it their
+    partition-local survivors (:func:`blockfold.top_k_block`)."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = W.partitionBy(qid).orderBy(order, F.asc(nid))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select(qid, nid, "rank", score)
+    )
+
+
 def brute_force_knn(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
     Output: (qid, nid, rank, cos).
 
-    ``vectorized`` (default) scores in an Arrow mapInPandas kernel: the
-    queries are collected driver-side (a query batch is bounded by design —
-    same argument as broadcasting them) and every corpus partition scores
-    locally with DIMENSION-ORDERED accumulation, the exact IEEE op sequence
-    of the interpreted fold path below (see assign_cells_vectorized) — so
-    cosines and rankings are bit-identical (pytest-proven). Spark does not
-    codegen HOF lambdas, so the fold path runs interpreted (~100x slower).
-
-    The expression path (``vectorized=False``) remains the semantic
-    reference: norms precomputed once per vector; dot/(na*nb) evaluates the
-    same IEEE ops as cosine(), preserving oracle bit-equality. Zero-norm
-    vectors follow try_divide semantics on BOTH paths: their pairs carry a
-    NULL cosine and rank last (desc-nulls-last, nid-ascending), so a
-    degenerate vector never aborts the job."""
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    if vectorized:
-        q_rows = sorted(
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in queries.select(id_col, vec_col).collect()
-        )
-        if not q_rows:
-            # contract parity with the expression path: an empty query set
-            # yields an empty result, not an error
-            return corpus.sparkSession.createDataFrame(
-                [], "qid long, nid long, rank int, cos double"
-            )
-
-        def kernel(batches):
-            import numpy as np
-            import pandas as pd
-
-            from dask_lightgbm_spark.functions.blockfold import (
-                fold_dots,
-                fold_sq_norms,
-            )
-
-            qids = np.asarray([i for i, _ in q_rows], dtype=np.int64)
-            Q = np.asarray([v for _, v in q_rows], dtype=np.float64)
-            d = Q.shape[1]
-            nq = np.sqrt(fold_sq_norms(Q))
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(pdf[vec_col].values).astype(np.float64)
-                if V.shape[1] != d:
-                    raise ValueError(
-                        f"dim mismatch: corpus {V.shape[1]} vs queries {d}"
-                    )
-                acc = fold_dots(V, Q)
-                nv = np.sqrt(fold_sq_norms(V))
-                # zero-norm vectors: the expression path's try_divide yields
-                # NULL cosine (ranked last under desc). Reproduce that here
-                # so vectorized=True is a drop-in: pairs whose denominator is
-                # 0 carry a null cos and sort after every finite cosine,
-                # nid-ascending — identical to Spark's desc-nulls-last window.
-                denom = nq[None, :] * nv[:, None]
-                degenerate = not (nv.all() and nq.all())
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = acc / denom
-                nid = pdf[id_col].astype("int64").values
-                # PARTIAL top-k per query within this Arrow batch: only
-                # k rows per (query, batch) leave the kernel, so the final
-                # global window ranks |queries| x k x n_batches rows instead
-                # of |queries| x |corpus| — the map-side-combine shape.
-                # Any global top-k row is necessarily in its batch's top-k
-                # (same (cos DESC, nid ASC) order), so results are identical.
-                if degenerate:
-                    # slow tier only when a zero-norm vector exists: top-k
-                    # finite cosines first, then up to k null-cos candidates
-                    # by nid (their global rank can only matter when a query
-                    # has < k finite candidates — and any global winner is
-                    # still its batch's winner within its tier)
-                    dz = denom == 0
-                    rows_q, rows_n, rows_c = [], [], []
-                    for j, q_id in enumerate(qids):
-                        col = cos[:, j]
-                        mask = nid != q_id
-                        v_mask = mask & ~dz[:, j]
-                        vn, vc = nid[v_mask], col[v_mask]
-                        order = np.lexsort((vn, -vc))[:k]
-                        null_n = np.sort(nid[mask & dz[:, j]])[:k]
-                        rows_q.append(
-                            np.full(len(order) + len(null_n), q_id, dtype=np.int64)
-                        )
-                        rows_n.append(np.concatenate([vn[order], null_n]))
-                        rows_c.extend(float(x) for x in vc[order])
-                        rows_c.extend([None] * len(null_n))
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(rows_q),
-                            "nid": np.concatenate(rows_n),
-                            "cos": pd.array(rows_c, dtype="Float64"),
-                        }
-                    )
-                    continue
-                out_q, out_n, out_c = [], [], []
-                for j, q_id in enumerate(qids):
-                    col = cos[:, j]
-                    mask = nid != q_id
-                    cand_n, cand_c = nid[mask], col[mask]
-                    order = np.lexsort((cand_n, -cand_c))[:k]
-                    out_q.append(np.full(len(order), q_id, dtype=np.int64))
-                    out_n.append(cand_n[order])
-                    out_c.append(cand_c[order])
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "cos": np.concatenate(out_c),
-                    }
-                )
-
-        from dask_lightgbm_spark.functions.partitioning import (
-            ensure_parallelism,
-        )
-
-        # spread a single-partition scan so every core scores a block. The
-        # kernel is a NumPy block fold (~0.2-0.5 core-s/MiB — the class the
-        # 1 MiB default is calibrated to), and each batch's partial top-k
-        # leaves only |q|·k rows, so wider spreads than the default were
-        # measured SLOWER at small inputs (r15 §16: s01 0.40 s adaptive vs
-        # 0.66 s at 32-wide) — no cost hint on purpose (r15 advisor).
-        scored = ensure_parallelism(
-            corpus.select(
-                F.col(id_col).cast("long").alias(id_col),
-                to_double_array(vec_col).alias(vec_col),
-            )
-        ).mapInPandas(kernel, "qid long, nid long, cos double")
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("nid"), to_double_array(vec_col).alias("nv")
-        ).withColumn("nn", norm("nv"))
-        q = queries.select(
-            F.col(id_col).alias("qid"), to_double_array(vec_col).alias("qv")
-        ).withColumn("qn", norm("qv"))
-        scored = (
-            c.join(F.broadcast(q), F.col("qid") != F.col("nid"))
-            .select(
-                "qid",
-                "nid",
-                F.try_divide(
-                    dot("qv", "nv"), F.col("qn") * F.col("nn")
-                ).alias("cos"),
-            )
-        )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cos")
+    Scores in an Arrow mapInPandas kernel: the queries are collected
+    driver-side (a query batch is bounded by design — same argument as
+    broadcasting them) and every corpus partition scores locally with
+    DIMENSION-ORDERED accumulation, the exact IEEE op sequence of
+    ``try_divide(dot(q, v), norm(q) * norm(v))`` over the interpreted folds
+    (see assign_cells_vectorized) — so cosines and rankings are
+    bit-identical to that plan (pytest-proven against it). Spark does not
+    codegen HOF lambdas, so the fold plan runs interpreted (~100x slower).
+    Zero-norm vectors follow try_divide semantics: their pairs carry a NULL
+    cosine and rank last (desc-nulls-last, nid-ascending), so a degenerate
+    vector never aborts the job."""
+    q_rows = sorted(
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in queries.select(id_col, vec_col).collect()
     )
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame(
+            [], "qid long, nid long, rank int, cos double"
+        )
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        from dask_lightgbm_spark.functions.blockfold import (
+            fold_dots,
+            fold_sq_norms,
+            top_k_block,
+        )
+
+        qids = np.asarray([i for i, _ in q_rows], dtype=np.int64)
+        Q = np.asarray([v for _, v in q_rows], dtype=np.float64)
+        d = Q.shape[1]
+        nq = np.sqrt(fold_sq_norms(Q))
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf[vec_col].values).astype(np.float64)
+            if V.shape[1] != d:
+                raise ValueError(
+                    f"dim mismatch: corpus {V.shape[1]} vs queries {d}"
+                )
+            # a zero denominator is try_divide's NULL cosine: masked, so it
+            # ranks after every finite cosine, nid-ascending
+            denom = nq[None, :] * np.sqrt(fold_sq_norms(V))[:, None]
+            null = denom == 0
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = fold_dots(V, Q) / denom
+            nid = pdf[id_col].astype("int64").values
+            # partial top-k: only k rows per (query, batch) leave the
+            # kernel — the map-side-combine shape of the global window
+            r, j = top_k_block(cos, nid, qids, k, descending=True, null=null)
+            yield pd.DataFrame(
+                {
+                    "qid": qids[j],
+                    "nid": nid[r],
+                    "cos": pd.arrays.FloatingArray(cos[r, j], null[r, j]),
+                }
+            )
+
+    from dask_lightgbm_spark.functions.partitioning import (
+        ensure_parallelism,
+    )
+
+    # spread a single-partition scan so every core scores a block. The
+    # kernel is a NumPy block fold (~0.2-0.5 core-s/MiB — the class the
+    # 1 MiB default is calibrated to), and each batch's partial top-k
+    # leaves only |q|·k rows, so wider spreads than the default were
+    # measured SLOWER at small inputs (r15 §16: s01 0.40 s adaptive vs
+    # 0.66 s at 32-wide) — no cost hint on purpose (r15 advisor).
+    scored = ensure_parallelism(
+        corpus.select(
+            F.col(id_col).cast("long").alias(id_col),
+            to_double_array(vec_col).alias(vec_col),
+        )
+    ).mapInPandas(kernel, "qid long, nid long, cos double")
+    return top_k_rank(scored, k, "cos")
 
 
 def assign_cells(
@@ -511,12 +464,7 @@ def ivf_knn(
             F.try_divide(dot("qv", "nv"), F.col("qn") * F.col("nn")).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return top_k_rank(scored, k, "cos")
 
 
 def ivf_serve_topk(
@@ -568,7 +516,10 @@ def ivf_serve_topk(
         import numpy as np
         import pandas as pd
 
-        from dask_lightgbm_spark.functions.blockfold import fold_dots
+        from dask_lightgbm_spark.functions.blockfold import (
+            fold_dots,
+            top_k_block,
+        )
 
         qmats = {
             c: (
@@ -590,16 +541,10 @@ def ivf_serve_topk(
                 # (cand, query) cosines via the dim-ordered fold — the
                 # multiply-add sequence of dot()'s F.aggregate fold
                 cos = fold_dots(NV, Q) / (nn[:, None] * qn[None, :])
-                for j in range(len(qids)):
-                    col = cos[:, j]
-                    mask = nid != qids[j]
-                    cand_n, cand_c = nid[mask], col[mask]
-                    # exact (cos desc, nid asc) order; float negation is a
-                    # sign flip, so ties stay ties
-                    order = np.lexsort((cand_n, -cand_c))[:k]
-                    out_q.append(np.full(len(order), qids[j], dtype=np.int64))
-                    out_n.append(cand_n[order])
-                    out_c.append(cand_c[order])
+                r, j = top_k_block(cos, nid, qids, k, descending=True)
+                out_q.append(qids[j])
+                out_n.append(nid[r])
+                out_c.append(cos[r, j])
             if out_q:
                 yield pd.DataFrame(
                     {
@@ -614,12 +559,7 @@ def ivf_serve_topk(
         .select(F.col(id_col).cast("long").alias(id_col), "v", "cell", "nn")
         .mapInPandas(kernel, "qid long, nid long, cos double")
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        part_topk.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return top_k_rank(part_topk, k, "cos")
 
 
 def cosine_neardup_pairs(
@@ -735,12 +675,7 @@ def lsh_knn(
             F.try_divide(dot("qv", "nv"), F.col("qn") * F.col("nn")).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return top_k_rank(scored, k, "cos")
 
 
 def quantize_int8(vec: Column) -> Column:
@@ -791,12 +726,7 @@ def quantized_knn(
     scored = c.join(F.broadcast(q), F.col("qid") != F.col("nid")).select(
         "qid", "nid", int_dot(F.col("qq"), F.col("nq")).alias("qscore")
     )
-    w = W.partitionBy("qid").orderBy(F.desc("qscore"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "qscore")
-    )
+    return top_k_rank(scored, k, "qscore")
 
 
 def mmr_rerank(

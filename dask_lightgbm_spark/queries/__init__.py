@@ -24,14 +24,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dask_lightgbm_spark.shipping import ship_package
+
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
-
-
-# Re-exported for back-compat; the implementation moved to shipping.py so
-# the barrier trainer (core.py) can ship the package without importing
-# the query registry.
-from dask_lightgbm_spark.shipping import ship_package as _ship_package  # noqa: E402
 
 
 # Session confs the query wrapper pins (timezone for oracle bit-parity;
@@ -128,7 +124,7 @@ def query(name: str, oracle: str | None = None):
             # defensive: driver owns the session; pin dynamic confs we need
             # (originals saved — see restore_confs)
             _pin_confs(spark)
-            _ship_package(spark)
+            ship_package(spark)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -682,9 +682,10 @@ def q22_positional_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q24 — arbitrary-Python-per-group (reference B6 / applyInPandas): z-score
-# of quantity within each returnflag group, computed in a pandas kernel with
-# exact-int sums so the SQL window oracle reproduces it bit-exactly.
+# q24 — per-group z-score of quantity within each returnflag group (the
+# reference's B6 applyInPandas case, which no longer crosses the Python
+# boundary): exact-int group sums from a built-in aggregate, broadcast back
+# onto the rows, so the SQL window oracle reproduces it bit-exactly.
 # ---------------------------------------------------------------------------
 
 _Q24_SQL = """

@@ -522,8 +522,6 @@ SELECT qid, nid, rank, cos FROM ranked WHERE rank <= 3"""
 
 @query("s10_ivf_learned_cells", _S10_SQL)
 def s10_ivf_learned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from dask_lightgbm_spark.operators.kmeans import (
         assign_to_literal_centroids,
         kmeans_centroids,
@@ -554,12 +552,7 @@ def s10_ivf_learned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return sim.top_k_rank(scored, 3, "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -1102,11 +1095,16 @@ def s18_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _s18_serve(spark, sf_dir, n_queries=10)
 
 
-def _s18_serve(
-    spark: SparkSession, sf_dir: str, n_queries: int, vectorized: bool = True
-) -> DataFrame:
+def _s18_serve(spark: SparkSession, sf_dir: str, n_queries: int) -> DataFrame:
+    """IVF-PQ serve for the ``vec_id < n_queries`` batch: one mapInPandas ADC
+    kernel over the cell-restricted codes (bit-parity with the declarative
+    cell-join + per-candidate ``sq_dist(slice, code_centroid)`` plan is
+    pinned by test_similarity.py::test_s18_serve_kernel_matches_expression_
+    path). The serve batch is bounded by contract (n_queries ≤
+    SERVE_BATCH_N ≪ the kernel's 10k guard)."""
+    from dask_lightgbm_spark.operators.pq import ivf_pq_serve_topk
+
     idx = _ivf_index(spark, sf_dir)  # (vec_id, v, cell, nn)
-    books = _pq_codebooks(spark, sf_dir)
     codes = _pq_codes(spark, sf_dir).select(
         "vec_id", *[f"code_{m}" for m in range(_PQ_M)]
     )
@@ -1114,39 +1112,8 @@ def _s18_serve(
     q = idx.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "cell"
     )
-    if vectorized:
-        # kernel ADC (r15 verdict #4): per-candidate interpreted
-        # element_at/fold expressions → one mapInPandas scorer over the
-        # cell-restricted codes; bit-parity with the expression path below
-        # is pinned by test_similarity.py::test_s18_serve_kernel_matches_
-        # expression_path, and the serve batch is bounded by contract
-        # (n_queries ≤ SERVE_BATCH_N ≪ the kernel's 10k guard).
-        from dask_lightgbm_spark.operators.pq import ivf_pq_serve_topk
-
-        return ivf_pq_serve_topk(
-            corpus.withColumnRenamed("vec_id", "nid"), q, books, k=3
-        )
-    from dask_lightgbm_spark.operators.kmeans import sq_dist
-    from dask_lightgbm_spark.operators.pq import code_centroid
-
-    from pyspark.sql import Window as W
-
-    cand = corpus.withColumnRenamed("vec_id", "nid").join(
-        F.broadcast(q), "cell"
-    ).filter(F.col("nid") != F.col("qid"))
-    dist = None
-    for m, book in enumerate(books):
-        d_m = sq_dist(
-            F.slice("qv", 1 + m * _PQ_SUB, _PQ_SUB),
-            code_centroid(book, F.col(f"code_{m}")),
-        )
-        dist = d_m if dist is None else dist + d_m
-    w = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("nid"))
-    return (
-        cand.withColumn("adc_dist", dist)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "adc_dist")
+    return ivf_pq_serve_topk(
+        corpus.withColumnRenamed("vec_id", "nid"), q, _pq_codebooks(spark, sf_dir), k=3
     )
 
 
@@ -1290,8 +1257,6 @@ SELECT qid, nid, rank, adc_dist FROM ranked WHERE rank <= 3"""
 def s20_knn_ivf_pq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-3 with 2-cell probing; index, codebooks, and code table
     all served from the session caches."""
-    from pyspark.sql import Window as W
-
     from dask_lightgbm_spark.operators.kmeans import sq_dist
     from dask_lightgbm_spark.operators.pq import code_centroid
 
@@ -1319,13 +1284,7 @@ def s20_knn_ivf_pq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             code_centroid(book, F.col(f"code_{m}")),
         )
         dist = d_m if dist is None else dist + d_m
-    w = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("nid"))
-    return (
-        cand.withColumn("adc_dist", dist)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "adc_dist")
-    )
+    return sim.top_k_rank(cand.withColumn("adc_dist", dist), 3, "adc_dist", ascending=True)
 
 
 def ivf_serve_oracle_sql() -> dict[str, str]:
@@ -1448,9 +1407,9 @@ def scale_ivf_build(
     embeddings and MATERIALIZE it (the caller times this call as index
     build). Not session-cached — returns ``(assigned, mod)``; the caller
     unpersists ``assigned`` when done."""
-    from dask_lightgbm_spark.queries import _ship_package
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)  # raw callable — the @query wrapper isn't shipping
+    ship_package(spark)  # raw callable — the @query wrapper isn't shipping
     e = load_table(spark, sf_dir, "embeddings")
     mod = scale_ivf_mod(e.count(), n_centroids)
     assigned = sim.assign_cells_vectorized(
@@ -1592,8 +1551,6 @@ def s21_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-filtered IVF top-3: candidates must share the query's cell
     (nprobe=2 probes) AND its label. Corpus norms come from the cached
     index; the tiny probe table (10 queries x 2 cells) is broadcast."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "embeddings")
     idx = _ivf_index(spark, sf_dir)  # vec_id, v, cell, nn
     lab = e.select("vec_id", "label")
@@ -1628,12 +1585,7 @@ def s21_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return sim.top_k_rank(scored, 3, "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -1708,8 +1660,6 @@ ORDER BY src, rank
 
 @query("s22_knn_graph", _S22_SQL)
 def s22_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     idx = _ivf_index(spark, sf_dir)
     counts = idx.groupBy("cell").agg(
         F.expr(f"(count(*) + {_S22_SHELL - 1}) div {_S22_SHELL}").alias("nsh")
@@ -1743,10 +1693,8 @@ def s22_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("src").orderBy(F.desc("cos"), F.asc("dst"))
     return (
-        edges.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _S22_K)
+        sim.top_k_rank(edges, _S22_K, "cos", qid="src", nid="dst")
         .select("src", "dst", "cos", "rank")
         .orderBy("src", "rank")
     )
@@ -2149,8 +2097,6 @@ ORDER BY qid, rank
 
 @query("s27_ivf_tombstone_delete", _S27_SQL)
 def s27_ivf_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "embeddings")
     index = _ivf_index(spark, sf_dir)  # (vec_id, v, cell, nn) — untouched
     tombstones = e.filter(F.col("vec_id") % 7 == 3).select("vec_id")
@@ -2178,13 +2124,7 @@ def s27_ivf_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-        .orderBy("qid", "rank")
-    )
+    return sim.top_k_rank(scored, 3, "cos").orderBy("qid", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -2204,8 +2144,6 @@ _S28_SQL = _S27_SQL
 
 @query("s28_ivf_compaction", _S28_SQL)
 def s28_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from dask_lightgbm_spark.session import scratch_dir
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -2244,13 +2182,7 @@ def s28_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-        .orderBy("qid", "rank")
-    )
+    return sim.top_k_rank(scored, 3, "cos").orderBy("qid", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -2298,8 +2230,6 @@ ORDER BY qid, rank
 
 @query("s29_knn_thresholded", _S29_SQL)
 def s29_knn_thresholded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     index = _ivf_index(spark, sf_dir)
     q = index.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
@@ -2327,10 +2257,8 @@ def s29_knn_thresholded(spark: SparkSession, sf_dir: str) -> DataFrame:
         # qualifying pairs
         .filter(F.col("cos") >= _S29_TAU)
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
     return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _S29_K)
+        sim.top_k_rank(pairs, _S29_K, "cos")
         .select("qid", "nid", "cos", "rank")
         .orderBy("qid", "rank")
     )

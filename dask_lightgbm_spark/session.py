@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """``min(32g, half of physical RAM)``: the local-mode JVM heap must leave
+    the other half to Python workers and the OS — a fixed 32g on a 15 GB
+    host let the heap grow until the kernel OOM-killed the JVM."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (OSError, ValueError):
+        return "32g"
+    return f"{min(32 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "spark-lightgbm-engine",
     cpus: int | None = None,
@@ -40,7 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate adds a redundant `size(arr) > 0` filter

@@ -18,10 +18,10 @@ an unbounded query stream runs at constant memory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_lightgbm_spark.operators.similarity import dot
+from dask_lightgbm_spark.operators.similarity import dot, top_k_rank
 from dask_lightgbm_spark.streaming.diag import drain_and_capture
 
 
@@ -83,12 +83,7 @@ def stream_ann_serving(
                 ).alias("cos"),
             )
         )
-        w = W.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nid", "rank", "cos")
-        )
+        topk = top_k_rank(scored, k, "cos")
         # a serve batch emits k rows per arriving query — bounded by design
         results[batch_id] = topk.collect()
 

@@ -371,6 +371,55 @@ def test_match_against_persisted_index_roundtrip(spark, tmp_path):
     assert (1001, 7) in {(n, c) for n, c, _ in base}
 
 
+def test_match_against_streaming_corpus_index_skips_prefilter(spark, tmp_path):
+    """A batch new batch against a STREAMING corpus band index must take
+    the un-filtered verify plan: the candidate set then derives from a
+    stream, and persisting it (the batch-only pre-filter) raises. The
+    drained stream's match set equals the batch index's."""
+    from dask_lightgbm_spark.operators.dedup import (
+        build_minhash_band_index,
+        minhash_lsh_match_against_index,
+    )
+
+    cdf = spark.createDataFrame(
+        [(i, f"corpus document number {i} about rivers and lakes") for i in range(12)],
+        ["doc_id", "text"],
+    )
+    ndf = spark.createDataFrame(
+        [(100, "corpus document number 7 about rivers and lakes")], ["doc_id", "text"]
+    )
+    bands, verify = build_minhash_band_index(cdf, "doc_id", "text")
+    bands.write.parquet(str(tmp_path / "bands"))
+    bands_batch = spark.read.parquet(str(tmp_path / "bands"))
+    bands_stream = spark.readStream.schema(bands_batch.schema).parquet(
+        str(tmp_path / "bands")
+    )
+    out = minhash_lsh_match_against_index(
+        ndf, bands_stream, verify, "doc_id", "text", _validate_index=False
+    )
+    assert out.isStreaming
+    q = (
+        out.writeStream.format("memory")
+        .queryName("match_stream_corpus")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    got = {
+        (r.new_id, r.corpus_id, r.jaccard)
+        for r in spark.sql("SELECT * FROM match_stream_corpus").collect()
+    }
+    want = {
+        (r.new_id, r.corpus_id, r.jaccard)
+        for r in minhash_lsh_match_against_index(
+            ndf, bands_batch, verify, "doc_id", "text", _validate_index=False
+        ).collect()
+    }
+    assert got == want and (100, 7, 1.0) in got
+
+
 def test_match_against_index_param_mismatch_errors(spark, tmp_path):
     """An index built with one (num_perm, band_size) queried with another
     must raise, not silently return zero matches (r12 advisor, medium):

@@ -67,6 +67,63 @@ def _toy_vectors(n=60, dim=8, seed=3):
     )
 
 
+def _top_k_window(scored, k, order):
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("qid").orderBy(order, F.asc("nid"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _pq_knn_expr(df, queries_filter, k, codebooks):
+    """pq_knn's parity reference, the interpreted plan: a broadcast query
+    join scored by per-candidate ``sq_dist(slice, code_centroid)`` folds
+    (the literal codebook keyed by cid value, so gapped books work), then a
+    row_number window."""
+    from dask_lightgbm_spark.operators.kmeans import sq_dist
+    from dask_lightgbm_spark.operators.pq import code_centroid, encode_pq
+    from dask_lightgbm_spark.operators.similarity import to_double_array
+
+    sub = len(codebooks[0][0][1])
+    queries = df.filter(queries_filter).select(
+        F.col("vec_id").alias("qid"), to_double_array("embedding").alias("qv")
+    )
+    pairs = encode_pq(df, codebooks).select(
+        F.col("vec_id").alias("nid"), *[f"code_{m}" for m in range(len(codebooks))]
+    ).join(F.broadcast(queries), F.col("nid") != F.col("qid"))
+    dist = None
+    for m, book in enumerate(codebooks):
+        d_m = sq_dist(
+            F.slice("qv", 1 + m * sub, sub),
+            code_centroid(book, F.col(f"code_{m}")),
+        )
+        dist = d_m if dist is None else dist + d_m
+    return _top_k_window(
+        pairs.withColumn("adc_dist", dist), k, F.asc("adc_dist")
+    ).select("qid", "nid", "rank", "adc_dist")
+
+
+def _brute_force_knn_expr(corpus, queries, k):
+    """brute_force_knn's parity reference, the interpreted plan: norms
+    folded once per vector, ``try_divide(dot, qn * nn)`` per pair (a zero
+    norm gives a NULL cosine, ranked last by the desc window)."""
+    from dask_lightgbm_spark.operators.similarity import dot, norm, to_double_array
+
+    c = corpus.select(
+        F.col("vec_id").alias("nid"), to_double_array("embedding").alias("nv")
+    ).withColumn("nn", norm("nv"))
+    q = queries.select(
+        F.col("vec_id").alias("qid"), to_double_array("embedding").alias("qv")
+    ).withColumn("qn", norm("qv"))
+    scored = c.join(F.broadcast(q), F.col("qid") != F.col("nid")).select(
+        "qid",
+        "nid",
+        F.try_divide(dot("qv", "nv"), F.col("qn") * F.col("nn")).alias("cos"),
+    )
+    return _top_k_window(scored, k, F.desc("cos")).select("qid", "nid", "rank", "cos")
+
+
 def test_pq_codebooks_and_encoding(spark):
     """Codebooks: contiguous codes, correct shapes; encoding picks the true
     nearest sub-centroid (verified against a numpy recomputation)."""
@@ -195,13 +252,13 @@ def test_pq_knn_vectorized_matches_expression_path(spark):
     df = spark.createDataFrame(pdf)
     books = train_codebooks(df, F.col("vec_id") < 4, dim=8, n_subspaces=2, n_iters=1)
     a = (
-        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=books, vectorized=False)
+        _pq_knn_expr(df, F.col("vec_id") < 5, k=4, codebooks=books)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=books, vectorized=True)
+        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=books)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -211,20 +268,20 @@ def test_pq_knn_vectorized_matches_expression_path(spark):
 
 def test_brute_force_knn_vectorized_matches_expression_path(spark):
     """similarity.brute_force_knn's Arrow kernel == the interpreted fold
-    expression path, bit-for-bit (cosines compared exactly, not approx)."""
+    expression plan (_brute_force_knn_expr), bit-for-bit (cosines compared exactly, not approx)."""
     from dask_lightgbm_spark.operators.similarity import brute_force_knn
 
     pdf = _toy_vectors(n=90, dim=16, seed=29)
     df = spark.createDataFrame(pdf)
     q = df.filter(F.col("vec_id") < 6)
     a = (
-        brute_force_knn(df, q, k=5, vectorized=False)
+        _brute_force_knn_expr(df, q, k=5)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        brute_force_knn(df, q, k=5, vectorized=True)
+        brute_force_knn(df, q, k=5)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -234,7 +291,7 @@ def test_brute_force_knn_vectorized_matches_expression_path(spark):
 
 
 def test_knn_empty_query_set_returns_empty(spark):
-    """Contract parity with the expression paths: an empty query set yields
+    """Contract parity with the expression plans: an empty query set yields
     an empty frame with the output schema, not an error."""
     from dask_lightgbm_spark.operators.pq import pq_knn, train_codebooks
     from dask_lightgbm_spark.operators.similarity import brute_force_knn
@@ -251,7 +308,7 @@ def test_knn_empty_query_set_returns_empty(spark):
 
 def test_pq_knn_gapped_codebook_scores_by_cid(spark):
     """A codebook whose cids are gapped (Lloyd's drops empty clusters) must
-    score by cid VALUE on both paths — not positional indexing, which would
+    score by cid VALUE in the kernel and the expression plan — not positional indexing, which would
     silently fetch the wrong centroid (ADVICE r6). Built by renumbering a
     trained book's cids to {0, 2, 5, ...} and re-encoding."""
     from dask_lightgbm_spark.operators.pq import encode_pq, pq_knn, train_codebooks
@@ -266,13 +323,13 @@ def test_pq_knn_gapped_codebook_scores_by_cid(spark):
     codes = enc.select("code_0").distinct().toPandas()["code_0"]
     assert set(codes) <= {cid for cid, _ in gapped[0]}
     a = (
-        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=gapped, vectorized=False)
+        _pq_knn_expr(df, F.col("vec_id") < 5, k=4, codebooks=gapped)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=gapped, vectorized=True)
+        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=gapped)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -281,7 +338,7 @@ def test_pq_knn_gapped_codebook_scores_by_cid(spark):
     # and the gapped book ranks identically to the dense original (same
     # centroids, relabeled codes)
     orig = (
-        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=books, vectorized=True)
+        pq_knn(df, F.col("vec_id") < 5, k=4, codebooks=books)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -305,8 +362,8 @@ def test_pq_knn_alien_code_raises(spark):
 
 def test_brute_force_zero_norm_null_cosine_parity(spark):
     """A zero-norm vector must NOT abort the job: its pairs carry NULL
-    cosine and rank last on both paths (try_divide semantics), so the
-    vectorized default stays a drop-in (ADVICE r6)."""
+    cosine and rank last in both the kernel and the interpreted reference
+    plan (try_divide semantics; ADVICE r6)."""
     from dask_lightgbm_spark.operators.similarity import brute_force_knn
 
     pdf = _toy_vectors(n=12, dim=8, seed=41)
@@ -315,13 +372,13 @@ def test_brute_force_zero_norm_null_cosine_parity(spark):
     q = df.filter(F.col("vec_id") < 2)
     # k > finite candidates forces the NULL tier into the result
     a = (
-        brute_force_knn(df, q, k=11, vectorized=False)
+        _brute_force_knn_expr(df, q, k=11)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        brute_force_knn(df, q, k=11, vectorized=True)
+        brute_force_knn(df, q, k=11)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -333,8 +390,8 @@ def test_brute_force_zero_norm_null_cosine_parity(spark):
     pdf2.at[0, "embedding"] = [0.0] * 8
     df2 = spark.createDataFrame(pdf2)
     q2 = df2.filter(F.col("vec_id") == 0)
-    a2 = brute_force_knn(df2, q2, k=3, vectorized=False).toPandas()
-    b2 = brute_force_knn(df2, q2, k=3, vectorized=True).toPandas()
+    a2 = _brute_force_knn_expr(df2, q2, k=3).toPandas()
+    b2 = brute_force_knn(df2, q2, k=3).toPandas()
     assert a2["cos"].isna().all() and len(a2) == 3
     pd.testing.assert_frame_equal(
         a2.sort_values("rank").reset_index(drop=True),

@@ -90,9 +90,9 @@ def test_fused_kernel_matches_expression_path(spark, tricky_df):
     """Kernel vs interpreted-expression twins: hs arrays (incl. order) and
     all minhash columns identical; fused single-pass == composed paths."""
     from dask_lightgbm_spark.functions.hashing import minhash_value
-    from dask_lightgbm_spark.queries import _ship_package
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)
+    ship_package(spark)
     num_perm = 8
     fused = (
         dedup._shingle_signatures(tricky_df, "doc_id", "text", 5, num_perm, keep_hs=True)
@@ -125,9 +125,9 @@ def test_fused_kernel_null_text_matches_expression_path(spark):
     """NULL text rows must flow through the kernel path (they force the
     arrow fallback route) and produce hs = [0] — exactly the expression
     path's output for NULL — instead of crashing (r15 advisor, medium)."""
-    from dask_lightgbm_spark.queries import _ship_package
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)
+    ship_package(spark)
     pdf = pd.DataFrame(
         {"doc_id": [0, 1, 2, 3], "text": ["hello world", None, "", None]}
     )

@@ -3,6 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from dask_lightgbm_spark.operators import similarity as sim
@@ -304,10 +305,11 @@ def test_serve_oracle_twins_match_full(spark, sf_dir, tmp_path):
     to DECIMAL and lose the last ulp)."""
     import duckdb
 
-    from dask_lightgbm_spark.queries import _ship_package, all_oracles
+    from dask_lightgbm_spark.queries import all_oracles
     from dask_lightgbm_spark.queries import similarity as S
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)
+    ship_package(spark)
     ivf = str(tmp_path / "ivf")
     codes = str(tmp_path / "codes")
     S._ivf_index(spark, sf_dir).select("vec_id", "v", "cell").write.mode(
@@ -352,11 +354,12 @@ def test_batched_serve_matches_widened_oracle(spark, sf_dir):
     `vec_id < 10` swap batched_serve_oracle_sql relies on."""
     import duckdb
 
-    from dask_lightgbm_spark.queries import _ship_package, all_oracles
+    from dask_lightgbm_spark.queries import all_oracles
     from dask_lightgbm_spark.queries.similarity import batched_serve_queries
+    from dask_lightgbm_spark.shipping import ship_package
     from tools.check import compare
 
-    _ship_package(spark)  # raw callables bypass the @query wrapper
+    ship_package(spark)  # raw callables bypass the @query wrapper
     n_q = 25
     con = duckdb.connect()
     con.sql(
@@ -381,9 +384,9 @@ def test_ivf_serve_topk_bit_exact_and_guards(spark, sf_dir):
     tie ranking — and both must equal the probe-rescoring plan on
     corpus-member queries (stored cell == nearest-centroid cell). Also
     pins the closure-size guard and the nprobe>1 refusal."""
-    from dask_lightgbm_spark.queries import _ship_package
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)
+    ship_package(spark)
     e = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -429,6 +432,44 @@ def test_ivf_serve_topk_bit_exact_and_guards(spark, sf_dir):
         )
 
 
+def _s18_serve_expr(spark, sf_dir, n_queries):
+    """_s18_serve's parity reference, the declarative plan: the cell
+    equi-join of the cached index and PQ codes against the query batch,
+    scored by per-candidate ``sq_dist(slice, code_centroid)`` folds, then a
+    row_number window."""
+    from pyspark.sql import Window as W
+
+    from dask_lightgbm_spark.operators.kmeans import sq_dist
+    from dask_lightgbm_spark.operators.pq import code_centroid
+    from dask_lightgbm_spark.queries import similarity as S
+
+    idx = S._ivf_index(spark, sf_dir)
+    codes = S._pq_codes(spark, sf_dir).select(
+        "vec_id", *[f"code_{m}" for m in range(S._PQ_M)]
+    )
+    corpus = idx.select("vec_id", "cell").join(codes, "vec_id")
+    q = idx.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "cell"
+    )
+    cand = corpus.withColumnRenamed("vec_id", "nid").join(
+        F.broadcast(q), "cell"
+    ).filter(F.col("nid") != F.col("qid"))
+    dist = None
+    for m, book in enumerate(S._pq_codebooks(spark, sf_dir)):
+        d_m = sq_dist(
+            F.slice("qv", 1 + m * S._PQ_SUB, S._PQ_SUB),
+            code_centroid(book, F.col(f"code_{m}")),
+        )
+        dist = d_m if dist is None else dist + d_m
+    w = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("nid"))
+    return (
+        cand.withColumn("adc_dist", dist)
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= 3)
+        .select("qid", "nid", "rank", "adc_dist")
+    )
+
+
 def test_s18_serve_kernel_matches_expression_path(spark, sf_dir):
     """r16 (r15 verdict #4): the vectorized IVF-PQ serve kernel must return
     the EXACT rows of the declarative cell-join + per-candidate
@@ -438,20 +479,20 @@ def test_s18_serve_kernel_matches_expression_path(spark, sf_dir):
     a batched (25) query width. Also pins the closure-size guard and the
     empty-batch contract."""
     from dask_lightgbm_spark.operators.pq import ivf_pq_serve_topk
-    from dask_lightgbm_spark.queries import _ship_package
     from dask_lightgbm_spark.queries.similarity import _s18_serve
+    from dask_lightgbm_spark.shipping import ship_package
 
-    _ship_package(spark)
+    ship_package(spark)
     key = ["qid", "rank"]
     for n_q in (10, 25):
         kern = (
-            _s18_serve(spark, sf_dir, n_queries=n_q, vectorized=True)
+            _s18_serve(spark, sf_dir, n_queries=n_q)
             .toPandas()
             .sort_values(key)
             .reset_index(drop=True)
         )
         expr = (
-            _s18_serve(spark, sf_dir, n_queries=n_q, vectorized=False)
+            _s18_serve_expr(spark, sf_dir, n_queries=n_q)
             .toPandas()
             .sort_values(key)
             .reset_index(drop=True)
@@ -487,15 +528,16 @@ def test_scale_ivf_matches_mod_parameterized_oracle(spark, sf_dir):
     Also pins scale_ivf_mod's spacing arithmetic on this corpus."""
     import duckdb
 
-    from dask_lightgbm_spark.queries import _ship_package, all_oracles
+    from dask_lightgbm_spark.queries import all_oracles
     from dask_lightgbm_spark.queries.similarity import (
         scale_ivf_build,
         scale_ivf_mod,
         scale_ivf_serve,
     )
+    from dask_lightgbm_spark.shipping import ship_package
     from tools.check import compare
 
-    _ship_package(spark)
+    ship_package(spark)
     n_q, n_cent = 25, 16
     assigned, mod = scale_ivf_build(spark, sf_dir, n_centroids=n_cent)
     try:
@@ -550,3 +592,57 @@ def test_expr_builders_match_lambda_builders(spark):
         p2 = d2._jdf.queryExecution().optimizedPlan().toString()
         assert canon(p1) == canon(p2), (p1, p2)
         assert d1.collect() == d2.collect()
+
+
+def _top_k_block_reference(scores, ids, qids, k, descending, null):
+    """The per-query partial top-k loop the kNN kernels ran before the
+    whole-block selector: per query, a stable ``np.lexsort`` over the
+    non-self scored rows, then the null-masked rows by id."""
+    rows, cols = [], []
+    for j, q in enumerate(qids):
+        live = np.flatnonzero(ids != q)
+        nul = np.zeros(len(ids), dtype=bool) if null is None else null[:, j]
+        scored, masked = live[~nul[live]], live[nul[live]]
+        key = -scores[scored, j] if descending else scores[scored, j]
+        top = scored[np.lexsort((ids[scored], key))][:k]
+        tail = masked[np.argsort(ids[masked], kind="stable")][: k - len(top)]
+        rows += [*top, *tail]
+        cols += [j] * (len(top) + len(tail))
+    return np.asarray(rows, dtype=np.intp), np.asarray(cols, dtype=np.intp)
+
+
+@st.composite
+def _score_blocks(draw):
+    """(scores, ids, qids, k, descending, null): scores from a small value
+    set (so the k-th position ties, -0.0 against 0.0 included), duplicate
+    ids, query ids that may be absent from the block, an optional random
+    null mask, and k up to past the block size."""
+    n = draw(st.integers(0, 14))
+    nq = draw(st.integers(1, 5))
+    values = [-1.0, -0.0, 0.0, 0.25, 1.0]
+    scores = np.asarray(
+        draw(st.lists(st.sampled_from(values), min_size=n * nq, max_size=n * nq)),
+        dtype=np.float64,
+    ).reshape(n, nq)
+    ids = np.asarray(draw(st.lists(st.integers(0, 6), min_size=n, max_size=n)), dtype=np.int64)
+    qids = np.asarray(draw(st.lists(st.integers(0, 9), min_size=nq, max_size=nq)), dtype=np.int64)
+    null = None
+    if draw(st.booleans()):
+        null = np.asarray(
+            draw(st.lists(st.booleans(), min_size=n * nq, max_size=n * nq)), dtype=bool
+        ).reshape(n, nq)
+    return scores, ids, qids, draw(st.integers(1, 18)), draw(st.booleans()), null
+
+
+@settings(max_examples=400, deadline=None)
+@given(_score_blocks())
+def test_top_k_block_matches_per_query_lexsort(block):
+    """blockfold.top_k_block (whole block: partition to the k-th key, one
+    lexsort over the survivors) selects exactly the rows, in exactly the
+    order, of the per-query lexsort loop it replaced in the kNN kernels."""
+    from dask_lightgbm_spark.functions.blockfold import top_k_block
+
+    scores, ids, qids, k, descending, null = block
+    rows, cols = top_k_block(scores, ids, qids, k, descending, null)
+    want_rows, want_cols = _top_k_block_reference(scores, ids, qids, k, descending, null)
+    assert np.array_equal(rows, want_rows) and np.array_equal(cols, want_cols)

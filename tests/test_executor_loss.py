@@ -791,11 +791,15 @@ killed = {}
 
 def barrier_stage_running(tracker):
     # the barrier stage is its job's ResultStage, which the scheduler
-    # numbers after the repartition's map stage: the job's highest id
+    # numbers after the repartition's map stage: the job's highest id.
+    # Adaptive execution first runs that map stage as a job of its own
+    # (one stage, same call site), which the cold Python workers can keep
+    # busy past the kill delay — so only a job that also lists the map
+    # stage counts
     active = set(tracker.getActiveStageIds())
     for jid in tracker.getActiveJobsIds():
         job = tracker.getJobInfo(jid)
-        if job is not None and job.stageIds and max(job.stageIds) in active:
+        if job is not None and len(job.stageIds) > 1 and max(job.stageIds) in active:
             return True
     return False
 
